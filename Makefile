@@ -1,4 +1,4 @@
-.PHONY: test test-fast package bench scaling clean
+.PHONY: test test-fast package bench clean
 
 test:
 	python -m pytest tests/ -x -q
@@ -13,9 +13,6 @@ package:
 
 bench:
 	python bench.py
-
-scaling:
-	python scaling_run.py
 
 clean:
 	rm -rf dist .pytest_cache

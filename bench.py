@@ -1,25 +1,17 @@
 #!/usr/bin/env python3
-"""Benchmark harness: frontier throughput + headline operator queries.
+"""Headline query sweep: median seconds per query over the 68 queries below.
 
 Prints ONE JSON line:
-    {"metric": "frontier URLs scheduled+deduped per sec", "value": N,
-     "unit": "sec", "queries": {...per-query seconds...}, "sf": ...,
-     "frontier": {...counters...}, "cpus": N}
+    {"metric": "headline query medians, summed", "value": S, "unit": "s",
+     "queries": {...per-query median seconds...}, "query_reps": {...},
+     "sf": ..., "cpus": N}
 
-The headline metric matches BASELINE.json: a synthetic URL frontier
-(deterministic, generated *inside Spark* — no driver-side loops) goes
-through the full scheduling path: canonicalize (vectorized pandas UDF) →
-key-hash (JVM xxhash64) → partitioned-bloom probe → exact anti-join confirm
-against the pre-seen set → per-host politeness slot assignment → budget
-split. Throughput = frontier rows / wall time of that pipeline.
+Each query runs once untimed (codegen warm-up) and then
+``STARCHART_BENCH_QUERY_REPS`` times (default 3) into a ``noop`` sink.
+A query that raises ends the run with a non-zero exit; nothing is retried.
+The frontier and the crawl engine are measured by ``perfbench/run.py``.
 
-Skew is built in: ~20% of the frontier lands on one mega-host (the
-github.com analog); politeness ordering still groups by host while the
-dedup path spreads by (host, salt).
-
-Scaling evidence (north_rule ≥0.8 efficiency between N and 4N): run
-``python bench.py`` with SPARK_GRAFT_CPUS=8 and =32 on the same input —
-``scaling_bench.py`` automates the two runs and writes BENCH/BASELINE.md.
+    SPARK_GRAFT_SF_DIR=<dir of sf parquet tables> python bench.py
 """
 
 from __future__ import annotations
@@ -30,13 +22,8 @@ import statistics
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from starchart_spark.functions.urls import canonicalize_via_dim, host_bucket  # noqa: E402
-from starchart_spark.operators import bloom as bloom_mod  # noqa: E402
-from starchart_spark.operators import dedup, politeness, skew  # noqa: E402
 from starchart_spark.queries import QUERIES  # noqa: E402
 from starchart_spark.session import get_spark  # noqa: E402
 
@@ -181,351 +168,54 @@ HEADLINE_QUERIES = [
     "hop_distance",
 ]
 
-N_HOSTS = 997  # prime, plus host 0 = mega-forge
-SEEN_FRACTION = 0.3
-# enough buckets that per-bucket work (bloom build, store files) spreads
-# over every core at local[32] AND over a 1000-executor cluster
-HOST_BUCKETS = 256
 
+def sweep(spark, sf_dir: str, reps: int) -> tuple[dict, dict]:
+    """(median seconds, raw rep seconds) per headline query.
 
-def synth_frontier(spark, n_urls: int):
-    """Deterministic skewed frontier, generated JVM-side from spark.range."""
-    parts = spark.sparkContext.defaultParallelism * 2
-    df = spark.range(0, n_urls, 1, parts).withColumn(
-        "host_id",
-        F.when(F.col("id") % 5 == 0, F.lit(0)).otherwise(
-            F.pmod(F.xxhash64("id"), F.lit(N_HOSTS)) + 1
-        ),
-    )
-    return df.withColumn(
-        "url",
-        F.concat(
-            F.lit("HTTPS://Forge-"),
-            F.col("host_id").cast("string"),
-            F.lit(".Test/repo/"),
-            (F.col("id") % (n_urls // 2)).cast("string"),  # ~2x duplication of keys
-            F.lit("?page=1#frag"),
-        ),
-    )
-
-
-def _keyed(frontier):
-    """Canonical page key: canonical host (D1 UDF) + path identity.
-
-    Projects NARROW immediately — only (id, host_key, key_hash, host_bucket)
-    survive: 28 bytes/row. The hostname string itself lives in the tiny
-    per-host dim (dictionary encoding); scheduling only needs host
-    *identity*, so the shuffles downstream move a long, not a string — at
-    10^10 rows that is the difference between a 280 GB and a 500+ GB
-    exchange.
+    The untimed run right before each query's reps warms its generated
+    code: a long-lived cluster compiles a query once and amortizes it, and
+    the JVM codegen cache holds ~100 entries, so warming every query up
+    front would evict the early ones. Medians of ``reps`` runs, because a
+    single ambient burst once moved a one-shot timing by ~2x.
     """
-    with_canon = canonicalize_via_dim(frontier, "url", "hostname")
-    page_key = F.concat(
-        F.col("hostname"), F.regexp_extract("url", r"\.Test(/[^?#]*)", 1)
-    )
-    return with_canon.select(
-        "id",
-        F.xxhash64("hostname").alias("host_key"),
-        F.xxhash64(page_key).alias("key_hash"),
-        host_bucket("hostname", HOST_BUCKETS).alias("host_bucket"),
-    )
-
-
-def warmup(spark) -> None:
-    """Absorb JVM codegen + Python-worker spawn cost before timing (a real
-    cluster's long-lived executors don't pay this per job)."""
-    from starchart_spark.functions.urls import canonicalize_udf
-
-    df = spark.range(0, 2_000_000, 1, spark.sparkContext.defaultParallelism)
-    df = df.withColumn("u", F.concat(F.lit("https://h"), (F.col("id") % 64).cast("string"), F.lit(".test/x")))
-    df.select(canonicalize_udf("u").alias("x")).groupBy("x").count().count()
-
-
-def frontier_pipeline(spark, n_urls: int) -> dict:
-    """Fused single-action scheduling pipeline (the production shape).
-
-    canonicalize → hash → bloom probe → keep-first → seen confirm →
-    per-host budget accounting runs as ONE Spark action with no
-    intermediate persists — the staged variant below (STARCHART_BENCH_
-    STAGED=1) materializes each stage for diagnostic timing and pays for
-    the materializations; its per-stage numbers are the decomposition
-    evidence, this fused number is the headline.
-
-    Budget accounting without a global rank: deferred = Σ_host
-    max(0, n_host − k_slots) — identical to counting rank>k rows (ranks
-    within a host are a permutation of 1..n_host). The exact per-row rank
-    assignment for over-budget hosts (skew.ranked_by_host, the two-pass
-    skew-proof ranker) is timed as its own follow-up stage on the hot
-    subset only — at any scale that subset is ~the mega-hosts.
-    """
-    frontier = synth_frontier(spark, n_urls)
-    # pre-seen set (prior crawl cycles) — setup, not part of the measured job
-    seen = (
-        _keyed(frontier.filter(F.col("id") < int(n_urls * SEEN_FRACTION)))
-        .select("key_hash", "host_bucket")
-        .dropDuplicates(["key_hash"])
-        .persist()
-    )
-    seen.count()
-
-    rate_ms = 100
-    budget_ms = 60_000_000
-    k_slots = budget_ms // rate_ms
-
-    stages: dict[str, float] = {}
-    t0 = time.time()
-    filters = bloom_mod.build(seen)
-    probed = bloom_mod.probe_jvm(_keyed(frontier), filters, strategy="broadcast")
-    uniq0 = dedup.keep_first_agg(
-        probed.select("id", "host_key", "key_hash", "maybe_seen"), ["key_hash"], "id"
-    )
-    uniq = dedup.seen_filter(uniq0, seen, ["key_hash"], "maybe_seen").select(
-        "id", "host_key", "key_hash"
-    ).persist()
-    host_counts = uniq.groupBy("host_key").agg(F.count(F.lit(1)).alias("__n"))
-    row = host_counts.agg(
-        F.sum("__n").alias("n"),
-        F.sum(F.greatest(F.col("__n") - k_slots, F.lit(0))).alias("deferred"),
-    ).collect()[0]
-    stages["schedule_one_action"] = round(time.time() - t0, 3)
-    uniq_total = int(row["n"] or 0)
-    n_deferred = int(row["deferred"] or 0)
-    # follow-up: exact per-row ranks for the over-budget (hot) hosts only —
-    # the part of the scheduler that needs a rank cutoff; uniq is cached by
-    # the action above so this times the ranking work itself
-    t1 = time.time()
-    hot_hosts = host_counts.filter(F.col("__n") > k_slots).select("host_key")
-    hot = uniq.join(F.broadcast(hot_hosts), "host_key", "left_semi")
-    ranked = skew.ranked_by_host(hot, "host_key", "id")
-    ranked.agg(
-        F.sum((F.col("host_rank") > k_slots).cast("long")).alias("deferred")
-    ).collect()
-    stages["rank_hot_hosts"] = round(time.time() - t1, 3)
-    elapsed = time.time() - t0
-
-    n_urls_out = n_urls
-    n_scheduled = uniq_total - n_deferred
-    seen.unpersist()
-    uniq.unpersist()
-    return {
-        "n_urls": n_urls_out,
-        "scheduled": n_scheduled,
-        "deferred": n_deferred,
-        "deduped": n_urls_out - n_scheduled - n_deferred,
-        "stages_s": stages,
-        "elapsed_s": round(elapsed, 3),
-        "urls_per_sec": round(n_urls_out / elapsed, 1),
-    }
-
-
-def frontier_pipeline_staged(spark, n_urls: int) -> dict:
-    frontier = synth_frontier(spark, n_urls)
-    # pre-seen set (prior crawl cycles) — setup, not part of the measured job
-    seen = (
-        _keyed(frontier.filter(F.col("id") < int(n_urls * SEEN_FRACTION)))
-        .select("key_hash", "host_bucket")
-        .dropDuplicates(["key_hash"])
-        .persist()
-    )
-    seen.count()
-
-    stages: dict[str, float] = {}
-    t0 = time.time()
-    # stage 1: rebuild partitioned bloom from the seen table (resume path)
-    filters = bloom_mod.build(seen).persist()
-    filters.count()
-    stages["bloom_build"] = round(time.time() - t0, 3)
-    # stage 2: canonicalize → hash → bloom probe in ONE pass, all JVM: the
-    # dim-join canonicalizer is O(distinct hosts) and probe_jvm evaluates
-    # the k bit-tests as Catalyst expressions — zero Python workers in the
-    # hot stage. Bitmaps here total ~15 MB so broadcast is right; at the
-    # 10^10-key point switch broadcast=False (co-partitioned one-row-per-
-    # bucket join).
-    t1 = time.time()
-    probed = bloom_mod.probe_jvm(
-        _keyed(frontier), filters, strategy="broadcast"
-    ).persist()
-    probed.count()
-    stages["canonicalize_hash_probe"] = round(time.time() - t1, 3)
-    # stage 3: confirm anti-join + in-frontier keep-first (hash agg, map-side
-    # combine) + skew-proof per-host politeness ranking + counters
-    t2 = time.time()
-    # keep-first BEFORE the seen-confirm: both operations key on key_hash, so
-    # Catalyst reuses one exchange, and the anti-join probe side shrinks to
-    # the deduped set
-    uniq0 = dedup.keep_first_agg(
-        probed.select("id", "host_key", "key_hash", "maybe_seen"), ["key_hash"], "id"
-    )
-    uniq = dedup.seen_filter(uniq0, seen, ["key_hash"], "maybe_seen").select(
-        "id", "host_key", "key_hash"
-    ).persist()
-    uniq_total = uniq.count()  # materialize BEFORE the fan-out below — a lazy
-    # cache is recomputed when the first actions race over it
-    # budget-bounded scheduling: a host may fetch budget/rate slots per
-    # batch. Hosts under budget schedule everything (no ranking needed);
-    # only over-budget (hot) hosts need the exact rank cutoff — so the
-    # skew-proof ranking runs on the mega-forge subset only.
-    rate_ms = 100
-    budget_ms = 60_000_000
-    k_slots = budget_ms // rate_ms
-    host_counts = uniq.groupBy("host_key").agg(F.count(F.lit(1)).alias("__n"))
-    hot_hosts = host_counts.filter(F.col("__n") > k_slots).select("host_key")
-    hot = uniq.join(F.broadcast(hot_hosts), "host_key", "left_semi")
-    ranked = skew.ranked_by_host(hot, "host_key", "id")
-    row = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("host_rank") > k_slots).cast("long")).alias("deferred"),
-    ).collect()[0]
-    stages["confirm_dedup_schedule"] = round(time.time() - t2, 3)
-    elapsed = time.time() - t0
-
-    n_deferred = int(row["deferred"] or 0)
-    n_scheduled = uniq_total - n_deferred  # cold hosts schedule wholly
-    seen.unpersist()
-    filters.unpersist()
-    probed.unpersist()
-    uniq.unpersist()
-    return {
-        "n_urls": n_urls,
-        "scheduled": n_scheduled,
-        "deferred": n_deferred,
-        "deduped": n_urls - n_scheduled - n_deferred,
-        "stages_s": stages,
-        "elapsed_s": round(elapsed, 3),
-        "urls_per_sec": round(n_urls / elapsed, 1),
-    }
-
-
-def shuffle_partitions_for(cores: int, n_rows: int) -> int:
-    """Spill-aware sizing: cores*2 (the ladder-validated default) until
-    data volume pushes past ~400k rows/partition, then scale with volume,
-    capped at cores*8. Measured at 50M URLs / 32 cores: 64 partitions
-    spill the confirm stage (78s); 128-256 run it in ~31s (up to 1.08M
-    URLs/s). Below that size the box's run-to-run noise (2x bursts)
-    swamps any partition-count effect — repeated A/B at 20M showed none."""
-    return max(cores * 2, min(n_rows // 400_000, cores * 8))
-
-
-def _run_once(sf_dir: str, cpus: int, n_urls: int, local_dir: str | None) -> dict:
-    extra = {}
-    if local_dir:
-        os.environ["STARCHART_LOCAL_DIR"] = local_dir
-    spark = get_spark(
-        app_name="starchart-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=shuffle_partitions_for(cpus, n_urls),
-        extra_conf=extra,
-    )
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-
-    # codegen warmup immediately before each timed run: a long-lived cluster
-    # compiles each query's generated code once and amortizes it over the
-    # whole job, so the timed number is steady-state execution, not Janino.
-    # Warm at the TARGET sf (AQE picks size-dependent join strategies, so a
-    # tiny-sf warmup compiles different code) and right before timing (the
-    # JVM codegen cache holds ~100 entries — warming all queries up front
-    # evicts the early ones).
-    per_query: dict[str, float] = {}
-    per_query_reps: dict[str, list[float]] = {}
-    # isolation/scaling experiments time the frontier only — the per-query
-    # loop is warm-up noise there (STARCHART_BENCH_SKIP_QUERIES=1)
-    skip_queries = os.environ.get("STARCHART_BENCH_SKIP_QUERIES") == "1"
-    # median-of-N per query (VERDICT r4 "do this" #2): a single ambient
-    # burst distorted seen_anti_join 0.46→0.86 s in round 4 on a one-shot
-    # timing; the frontier already reps — queries now do too.
-    q_reps = max(1, int(os.environ.get("STARCHART_BENCH_QUERY_REPS", "3")))
-    for name in [] if skip_queries else HEADLINE_QUERIES:
+    medians: dict[str, float] = {}
+    raw: dict[str, list[float]] = {}
+    for name in HEADLINE_QUERIES:
         fn, _ = QUERIES[name]
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         times = []
-        for _ in range(q_reps):
+        for _ in range(reps):
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
-        per_query[name] = round(statistics.median(times), 3)
-        per_query_reps[name] = times
-
-    warmup(spark)
-    # best-of-N frontier reps (default 3). The box has documented ambient
-    # 2x noise bursts lasting minutes (BENCH.md hardware notes): a single
-    # rep landing inside a burst once recorded a 50.6s confirm stage where
-    # repeated runs measure ~11.5s (round-2 official record vs builder's).
-    # Reporting the best of N is standard practice for throughput under
-    # external interference; every rep is recorded alongside for honesty.
-    n_reps = max(1, int(os.environ.get("STARCHART_BENCH_REPS", "3")))
-    pipeline = (
-        frontier_pipeline_staged
-        if os.environ.get("STARCHART_BENCH_STAGED") == "1"
-        else frontier_pipeline
-    )
-    # ambient-state annotation (BENCH.md forensics protocol): a 3 s
-    # single-thread DRAM copy probe brackets the frontier reps so a reader
-    # of this JSON can place the run inside or outside the box's healthy
-    # 13-15 GB/s band without hunting through session notes. Annotation
-    # only — reps are never gated or discarded here.
-    def _dram_probe() -> float | None:
-        try:
-            import membw
-
-            return membw.measure(1)
-        except Exception:
-            return None
-
-    probe_pre = _dram_probe()
-    reps = [pipeline(spark, n_urls) for _ in range(n_reps)]
-    probe_post = _dram_probe()
-    stats = max(reps, key=lambda s: s["urls_per_sec"])
-    # median-of-N reported alongside best-of-N (ADVICE r3 #4): the best
-    # filters the box's documented ambient bursts, the median shows what a
-    # typical rep delivers — readers get both, plus every raw rep.
-    sorted_rates = sorted(s["urls_per_sec"] for s in reps)
-    mid = len(sorted_rates) // 2
-    median_rate = (
-        sorted_rates[mid]
-        if len(sorted_rates) % 2
-        else round((sorted_rates[mid - 1] + sorted_rates[mid]) / 2, 1)
-    )
-
-    out = {
-        "metric": "frontier URLs scheduled+deduped per sec",
-        "value": stats["urls_per_sec"],
-        "unit": "sec",
-        "queries": per_query,
-        "query_reps": per_query_reps,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "frontier": stats,
-        "frontier_reps_urls_per_sec": [s["urls_per_sec"] for s in reps],
-        "frontier_median_urls_per_sec": median_rate,
-        "dram_probe_gb_s": {"pre": probe_pre, "post": probe_post},
-        "cpus": cpus,
-    }
-    spark.stop()
-    return out
+        medians[name] = round(statistics.median(times), 3)
+        raw[name] = times
+    return medians, raw
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # 20M default: below ~10M the frontier number measures fixed stage
-    # costs, not throughput (at 2M the same pipeline reads ~196k/s; at 20M,
-    # ~900k/s on 32 cores). Scaled down when benching a tiny sf dir.
-    default_urls = 20_000_000 if "0.1" in sf_dir else 2_000_000
-    n_urls = int(os.environ.get("STARCHART_BENCH_URLS", str(default_urls)))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
+    reps = max(1, int(os.environ.get("STARCHART_BENCH_QUERY_REPS", "3")))
+    spark = get_spark(
+        app_name="starchart-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus * 2,
+    )
     try:
-        out = _run_once(sf_dir, cpus, n_urls, local_dir=None)
-    except Exception as e:  # worker crash / memory pressure: one clean retry
-        print(f"bench attempt 1 failed ({type(e).__name__}); retrying with "
-              f"/tmp shuffle dir and half parallelism", file=sys.stderr)
-        try:
-            SparkSession = __import__("pyspark.sql", fromlist=["SparkSession"]).SparkSession
-            active = SparkSession.getActiveSession()
-            if active is not None:
-                active.stop()
-        except Exception:
-            pass
-        out = _run_once(sf_dir, max(cpus // 2, 8), n_urls, local_dir="/tmp/spark-local")
-        out["retried"] = True
-    print(json.dumps(out))
+        medians, raw = sweep(spark, sf_dir, reps)
+    finally:
+        spark.stop()
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    print(json.dumps({
+        "metric": "headline query medians, summed",
+        "value": round(sum(medians.values()), 3),
+        "unit": "s",
+        "queries": medians,
+        "query_reps": raw,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpus,
+    }))
 
 
 if __name__ == "__main__":

@@ -262,7 +262,10 @@ def make_corpus(spec: CorpusSpec) -> Corpus:
     return Corpus(
         spec=spec,
         seed_forges=pd.DataFrame(forges),
-        consent=pd.DataFrame(consent),
+        # object dtype keeps an optional rate_ms as int / None: inferred, a
+        # column mixing ints and None becomes float64, which the LongType
+        # consent field rejects
+        consent=pd.DataFrame(consent, dtype=object),
         documents=pd.DataFrame(docs),
         golden_users=pd.DataFrame(g_users),
         golden_repositories=pd.DataFrame(g_repos),

@@ -168,7 +168,6 @@ class CrawlSettings:
     rate_ms: int = politeness.DEFAULT_RATE_MS
     budget_ms: int | None = None  # politeness budget per host per batch
     host_buckets: int = 32
-    use_bloom: bool = True
     # below this many seen keys the exact anti-join alone is cheaper than a
     # probe pass — the bloom layer only engages past the threshold. The
     # check is DRIVER-side (a startup count + per-batch observed inserts),
@@ -215,19 +214,6 @@ class CrawlSettings:
     # register precision for the host_hll ledger (m = 2^b registers/host,
     # rel. error ≈ 1.04/√m — b=12 ⇒ ±1.6%)
     hll_b: int = 12
-    # plan compaction (round-5 cadence work): eagerly localCheckpoint the
-    # deep parse/schedule intermediates so every downstream branch of the
-    # commit DAG references a shallow scan instead of re-embedding the full
-    # parse plan. Round-5 jobdump evidence: per-batch wall-clock at toy
-    # scale is DRIVER time — a ~4 s Catalyst analysis gap before the first
-    # commit job plus 0.3-1 s AQE re-optimization gaps between stages, all
-    # proportional to logical-plan size, while the jobs themselves run in
-    # <0.2 s. Checkpointing trades ~3 tiny materialization jobs for an
-    # O(plan-size) cut in that driver time. Costs lineage: a lost
-    # checkpoint block fails the batch instead of recomputing — the right
-    # trade for a perpetual small-batch daemon, the wrong one for huge
-    # one-shot batches, hence the switch.
-    compact_plans: bool = True
     # adaptive per-host rate control (operators/aimd.py, Chiu & Jain 1989):
     # transport mode only. When set, (a) transport faults are RECORDED
     # (fetch_log table) instead of failing the batch — the failed fetch
@@ -575,12 +561,10 @@ class CrawlEngine:
     # -- bloom filter lifecycle ----------------------------------------------
 
     def _bloom_engaged(self) -> bool:
-        """Driver-only engage decision: bloom on AND the seen set is past
-        the threshold (or unknown — direct callers get round-3 behavior).
-        No Spark jobs: the size comes from the startup count + observed
-        per-batch inserts."""
-        if not self.s.use_bloom:
-            return False
+        """Driver-only engage decision: the seen set is past the threshold
+        (or unknown — direct callers get round-3 behavior). No Spark jobs:
+        the size comes from the startup count + observed per-batch
+        inserts."""
         if self.s.bloom_min_keys <= 0 or self._seen_total is None:
             return True
         return self._seen_total >= self.s.bloom_min_keys
@@ -654,7 +638,7 @@ class CrawlEngine:
         # (the check reads the data, and mid-run writers set the flag False)
         self._entities_pure = self._entity_confirm_skippable()
         batch_id = self._last_batch_id()
-        if self.s.use_bloom and self.s.bloom_min_keys > 0:
+        if self.s.bloom_min_keys > 0:
             # one startup count seeds the driver-side engage threshold;
             # per-batch growth comes from the observed url_seen inserts
             self._seen_total = self.url_seen.read(self.spark).count()
@@ -1026,15 +1010,16 @@ class CrawlEngine:
             "doc_id", "forge_id", "forge_url", "forge_type", "effective_rate_ms",
             "host_bucket",
         )
-        repo_rows = parsed.join(meta, "doc_id")
-        if s.compact_plans:
-            # materialize the parse ONCE and cut its lineage: every branch
-            # of the commit DAG (topics, politeness, entities, lineage,
-            # termination) otherwise re-embeds the full from_json parse
-            # plan, and at micro-batch cadence the driver's plan
-            # analysis/AQE re-optimization over that depth IS the
-            # wall-clock (see CrawlSettings.compact_plans)
-            repo_rows = repo_rows.localCheckpoint(eager=True)
+        # materialize the parse ONCE and cut its lineage: every branch of
+        # the commit DAG (topics, politeness, entities, lineage,
+        # termination) otherwise re-embeds the full from_json parse plan,
+        # and at micro-batch cadence the driver's plan analysis/AQE
+        # re-optimization over that depth IS the wall-clock — round-5 job
+        # dumps showed a ~4 s Catalyst analysis gap before the first commit
+        # job plus 0.3-1 s AQE gaps between stages, while the jobs ran in
+        # <0.2 s. The cost is lineage: a lost checkpoint block fails the
+        # batch instead of recomputing it.
+        repo_rows = parsed.join(meta, "doc_id").localCheckpoint(eager=True)
 
         # 3. politeness: fetch list = page fetch (idx 0) + one topics call per
         # repo in page order (P1: ≥rate between calls within a host). Only
@@ -1188,10 +1173,9 @@ class CrawlEngine:
                 "doc_id", "hostname", "spans"
             )
         )
-        if s.compact_plans:
-            # same trade as repo_rows: one tiny job now, a shallow scan in
-            # every downstream reference of the topics parse
-            topics = topics.localCheckpoint(eager=True)
+        # same trade as repo_rows: one tiny job now, a shallow scan in
+        # every downstream reference of the topics parse
+        topics = topics.localCheckpoint(eager=True)
 
         # 5. normalize + in-batch dedup. Lazy persists: these plans feed
         # several branches of the single commit DAG (entity insert, seen

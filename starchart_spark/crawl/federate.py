@@ -12,8 +12,8 @@ Reproduces the reference's federation plane
 - **ingest** (N6, schema.rs:137-162): the inverse projection, with an
   ``imported=true`` lineage flag (D9).
 - **export layout** (S8, lib.rs:61-110): one YAML per entity at
-  ``<host>/<owner>/<repo>/publiccode.yml`` — expressed as a
-  ``partitionBy(host, owner)`` write.
+  ``<host>/<owner>/<repo>/publiccode.yml`` — written by
+  ``interchange.export_tree``.
 - **snapshot publish** (S9/S10, lib.rs:221-304): tar of the tree with
   retention 5 — our SnapshotTable already provides snapshot+expire; ``tar``
   remains only as the interchange format.
@@ -127,18 +127,6 @@ def ingest_publiccode(rendered: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return rendered.mapInPandas(_ingest, out_schema)
-
-
-def export_tree(repos: DataFrame, out_dir: str) -> None:
-    """S8: YAML tree export partitioned by (host, owner) — at scale one
-    writer task per partition, no driver-side file loop."""
-    rendered = render_publiccode(repos)
-    (
-        rendered.withColumn("host_dir", F.regexp_replace("hostname", r"https?://|/", ""))
-        .write.mode("overwrite")
-        .partitionBy("host_dir", "owner")
-        .parquet(out_dir)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -6,13 +6,11 @@ parquet table next to the seen-set table, and maintained *incrementally*:
 each batch ORs only the newly committed keys into the touched buckets'
 bitmaps (O(new keys), not O(|seen|)).
 
-Three probe paths, all bit-identical (parity-tested):
+Two probe paths, bit-identical (parity-tested):
 
 - ``probe`` — cogroup on ``host_bucket``: each task gets one bucket's
   candidates plus that bucket's single filter row. Right shape for engine
   micro-batches (thousands of rows).
-- ``probe_with_store`` — per-bucket side files (the Iceberg side-file
-  pattern) read lazily by long-lived workers; no shuffle, no broadcast.
 - ``probe_jvm`` — THE frontier-scale hot path: bitmaps live as
   ``array<long>`` words in the filter table and the k bit-tests are pure
   Catalyst expressions (join + element_at + shifts). Zero Python in the
@@ -47,14 +45,11 @@ filter maintenance cost stays O(new keys).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 DEFAULT_BITS_PER_KEY = 10
 MAX_M_BITS = 1 << 31  # per-bucket cap; beyond this, add buckets
@@ -337,75 +332,3 @@ def probe_jvm(
         out_col,
         F.when(F.col("__m").isNull(), F.lit(False)).otherwise(F.expr(expr)),
     ).drop("__fbucket", "__m", "__k", "__w", "__mix")
-
-
-# ---------------------------------------------------------------------------
-# store-backed probe: side-file variant (resume / cross-job reuse)
-# ---------------------------------------------------------------------------
-#
-# Persists one small file per bucket next to the seen-set table (the Iceberg
-# side-file pattern) and probes with a scalar Arrow UDF: no shuffle, no
-# broadcast, no driver collect — each long-lived worker lazily loads only
-# the buckets that appear in its partitions and caches them across batches.
-
-_STORE_CACHE: dict = {}  # (store_dir, bucket) -> (m, k, bitmap) per worker
-
-
-def save_store(filters: DataFrame, store_dir: str) -> None:
-    """Write one ``<bucket>.bloom`` file (24-byte header + bitmap) per
-    bucket. Executors write their own partitions (shared filesystem /
-    object store at cluster scale); a store dir is immutable once written —
-    write a fresh epoch-named dir per filter generation."""
-    os.makedirs(store_dir, exist_ok=True)
-
-    def _write(rows) -> None:
-        for r in rows:
-            path = os.path.join(store_dir, f"{int(r['host_bucket'])}.bloom")
-            with open(path, "wb") as fh:
-                fh.write(
-                    np.array(
-                        [r["m_bits"], r["k_hashes"], r["n_keys"]], dtype=np.int64
-                    ).tobytes()
-                )
-                fh.write(_words_u64(r["words"]).tobytes())
-
-    filters.foreachPartition(_write)
-
-
-def probe_with_store(
-    candidates: DataFrame,
-    store_dir: str,
-    hash_col: str = "key_hash",
-    bucket_col: str = "host_bucket",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Same contract as ``probe`` (missing bucket file ⇒ definitely new),
-    via the persisted per-bucket store. Narrow: only (bucket, hash) cross
-    the Arrow boundary, candidates keep their partitioning."""
-
-    @pandas_udf(T.BooleanType())
-    def _probe(bucket: pd.Series, mixed: pd.Series) -> pd.Series:
-        b = bucket.to_numpy(dtype=np.int64)
-        h = mixed.to_numpy(dtype=np.int64).view(np.uint64)
-        out = np.zeros(len(b), dtype=bool)
-        for bk in np.unique(b):
-            key = (store_dir, int(bk))
-            entry = _STORE_CACHE.get(key)
-            if entry is None:
-                path = os.path.join(store_dir, f"{int(bk)}.bloom")
-                if os.path.exists(path):
-                    raw = np.fromfile(path, dtype=np.int64)
-                    entry = (int(raw[0]), int(raw[1]), raw[3:].view(np.uint64))
-                else:
-                    entry = (0, 0, None)
-                _STORE_CACHE[key] = entry
-            m, k, words = entry
-            if words is None:
-                continue
-            sel = b == bk
-            out[sel] = _test_bits(words, h[sel], k, m)
-        return pd.Series(out)
-
-    return candidates.withColumn(
-        out_col, _probe(F.col(bucket_col), F.xxhash64(hash_col))
-    )

@@ -54,7 +54,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -250,31 +250,6 @@ def kmeans(
         ]
     )
     return spark.createDataFrame(rows, schema)
-
-
-def kmeans_assign(
-    vectors: DataFrame,
-    cents: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, cid) nearest-centroid assignment — one Arrow pass,
-    centroids broadcast, no shuffle. ``cents`` is the OFFSET-domain k×d
-    int64 matrix (what the training loop iterates on)."""
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast(cents)
-    qvecs = quantize(vectors, id_col, vec_col)
-
-    def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].astype("int64"), "cid": _assign_ids(pdf, c)}
-            )
-
-    return qvecs.mapInPandas(_assign, _ASSIGN_SCHEMA)
 
 
 def train_and_assign(

@@ -13,8 +13,7 @@ same per-host schedule declaratively:
   order get slots ``slot[i] = max(arrival[i], slot[i-1] + rate_ms)`` — a
   token bucket of size 1. With uniform arrivals this telescopes to
   ``(row_number-1) * rate_ms``, which is pure window arithmetic (JVM-side,
-  whole-stage codegen) — that is the default fast path. The general
-  cumulative-max form runs as a vectorized ``applyInPandas`` per host group.
+  whole-stage codegen): ``assign_slots_window``.
 - **deferral**: rows whose slot exceeds the batch's politeness budget are
   deferred to the next micro-batch and counted per partition
   (``deferred_by_politeness``, north_rule lineage).
@@ -32,11 +31,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 DEFAULT_RATE_MS = 2000  # crawler.wait_before_next_api_call (config/default.toml:38)
 LIMITER_WINDOW_S = 54  # src/search.rs:78-90
@@ -75,7 +71,7 @@ def assign_slots_window(
     rate_col: str = "effective_rate_ms",
     out_col: str = "slot_ms",
 ) -> DataFrame:
-    """Fast path: uniform-arrival token bucket == window arithmetic.
+    """Uniform-arrival token bucket == window arithmetic.
 
     slot = (rank within host by crawl order - 1) * rate. Fully JVM-side.
     """
@@ -83,43 +79,6 @@ def assign_slots_window(
     return df.withColumn(
         out_col, ((F.row_number().over(w) - 1).cast("long") * F.col(rate_col))
     )
-
-
-def assign_slots_token_bucket(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    host_col: str = "hostname",
-    rate_col: str = "effective_rate_ms",
-    arrival_col: str | None = None,
-    out_col: str = "slot_ms",
-) -> DataFrame:
-    """General path: per-host cumulative-max slot assignment.
-
-    ``slot[i] = max(arrival[i], slot[i-1] + rate)`` — handles non-uniform
-    arrivals (re-queued deferred rows carry their earliest-allowed time).
-    Vectorized numpy inside ``applyInPandas``; no per-row Python.
-    """
-    out_schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.LongType(), False)])
-    order_list = list(order_cols)
-
-    def _assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_list, kind="mergesort").reset_index(drop=True)
-        rate = pdf[rate_col].to_numpy(dtype=np.int64)
-        arrival = (
-            pdf[arrival_col].to_numpy(dtype=np.int64)
-            if arrival_col
-            else np.zeros(len(pdf), dtype=np.int64)
-        )
-        # slot[i] = max(arrival[i], slot[i-1] + rate[i-1]) ; with constant rate
-        # within a host this is max(arrival[i], cummax(arrival - i*rate) + i*rate)
-        # — a closed form, no scan loop needed:
-        idx = np.arange(len(pdf), dtype=np.int64)
-        base = arrival - idx * rate
-        slot = np.maximum.accumulate(base) + idx * rate
-        pdf[out_col] = slot
-        return pdf
-
-    return df.groupBy(host_col).applyInPandas(_assign, out_schema)
 
 
 def split_by_budget(

@@ -10,8 +10,7 @@ them to one task. Mitigations, in order of preference:
    ``salt ∈ [0, S)`` subkeys for the heavy stages (fetch, parse, dedup,
    merge), then either (a) re-aggregate per host in a second phase for
    counters, or (b) keep salt in the key where per-host totality isn't
-   needed. ``S`` scales with the host's frontier share so small hosts pay
-   no extra shuffle width.
+   needed. ``S`` is a fixed width per call site (``with_salt``).
 
 Per-host *counters* (lineage: fetched/deduped/deferred, A3) use classic
 two-phase aggregation: partial count per (host, salt) — map-side combined —
@@ -36,35 +35,6 @@ def with_salt(
     determinism and replay require salts to be pure functions of data)."""
     return df.withColumn(
         out_col, F.pmod(F.xxhash64(*row_key_cols), F.lit(salt_buckets)).cast("int")
-    )
-
-
-def scaled_salt(
-    df: DataFrame,
-    host_col: str,
-    row_key_cols: Sequence[str],
-    rows_per_task: int = 1_000_000,
-    max_salt: int = 1024,
-    out_col: str = "salt",
-) -> DataFrame:
-    """Per-host salt width scaled to that host's row count: a host with n
-    rows gets ceil(n / rows_per_task) salt values (capped). Small hosts get
-    salt=0 everywhere — no shuffle blow-up; mega-forges fan out."""
-    counts = df.groupBy(host_col).agg(F.count(F.lit(1)).alias("__n"))
-    widths = counts.select(
-        host_col,
-        F.least(
-            F.greatest(F.ceil(F.col("__n") / rows_per_task), F.lit(1)), F.lit(max_salt)
-        )
-        .cast("int")
-        .alias("__width"),
-    )
-    return (
-        df.join(F.broadcast(widths), host_col)
-        .withColumn(
-            out_col, F.pmod(F.xxhash64(*row_key_cols), F.col("__width")).cast("int")
-        )
-        .drop("__width")
     )
 
 

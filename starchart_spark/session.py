@@ -20,6 +20,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_mem() -> str:
+    """Half the machine's RAM, at most 32g. A heap cap above physical RAM
+    lets G1 grow the heap until the kernel kills the JVM: with a fixed 32g
+    cap on a 15 GiB box the test session's JVM reached 14.7 GB RSS and
+    was killed mid-suite."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, ram // 2 >> 30))}g"
+
+
 def get_spark(
     app_name: str = "starchart_spark",
     master: str | None = None,
@@ -85,7 +94,10 @@ def get_spark(
         .config("spark.python.worker.reuse", "true")
         # local mode: the driver heap IS the cluster memory; size it for the
         # parallelism (32 tasks × shuffle/persist buffers starve an 8g heap)
-        .config("spark.driver.memory", os.environ.get("STARCHART_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("STARCHART_DRIVER_MEM", _default_driver_mem()),
+        )
         # long sessions running many queries accumulate broadcast/shuffle
         # state that ContextCleaner only releases after a driver GC; the
         # 30min default periodicGC never fires inside a ~25min bench run,

@@ -250,7 +250,7 @@ def make_frontier_fn(rate_ms: int | None = None, budget_ms: int | None = None):
     ``budget_ms`` set, each invocation is one batch-engine micro-batch for
     this host: fetches get token-bucket slots 0, rate, 2·rate, … and only
     the ``ceil(budget/rate)`` fetches whose slot < budget are emitted as
-    visits — exactly ``politeness.assign_slots`` + ``split_by_budget``.
+    visits — exactly ``politeness.assign_slots_window`` + ``split_by_budget``.
     The remainder of the current page is emitted as ``kind='defer'`` rows
     (mirror of the batch engine's pending table after that batch, slot ≥
     budget) and carried in state via ``done_in_page``; like the batch

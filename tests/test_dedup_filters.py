@@ -134,27 +134,6 @@ def test_probe_plan_is_copartitioned_not_broadcast(spark, keyed):
     assert "BroadcastExchange" not in cplan
 
 
-def test_probe_with_store_matches_cogroup(spark, keyed, tmp_path):
-    """The side-file-store probe (frontier-scale path) gives bit-identical
-    answers to the cogroup probe, including missing buckets ⇒ False."""
-    filters = bloom.build(keyed)
-    store = str(tmp_path / "bloomstore")
-    bloom.save_store(filters, store)
-    a = sorted(
-        (r["key_hash"], r["maybe_seen"])
-        for r in bloom.probe(spark, keyed, filters).collect()
-    )
-    b = sorted(
-        (r["key_hash"], r["maybe_seen"])
-        for r in bloom.probe_with_store(keyed, store).collect()
-    )
-    assert a == b
-    other = spark.createDataFrame(
-        [(1, "h", 999)], ["key_hash", "hostname", "host_bucket"]
-    )
-    assert bloom.probe_with_store(other, store).collect()[0]["maybe_seen"] is False
-
-
 def test_probe_jvm_matches_cogroup(spark, keyed):
     """The pure-JVM probe (frontier hot path) gives bit-identical answers to
     the cogroup probe on inserted keys, fresh keys (FPR pattern included),

@@ -66,3 +66,15 @@ def test_crawl_order_mixed(mixed):
     _, dfs, eng = mixed
     cols = ["seq", "hostname", "page", "idx_in_page", "doc_id"]
     assert _rows(eng.crawl_order(), cols) == _rows(dfs["golden_crawl_order"], cols)
+
+
+def test_rate_override_consent_lifts_to_long(spark):
+    """An optional per-forge rate reaches the LongType consent field as an
+    int or NULL, never as a float."""
+    spec = CorpusSpec(n_forges=4, rate_override_every=2)
+    consent = corpus_to_spark(spark, make_corpus(spec))["consent"]
+    rates = {r["hostname"]: r["rate_ms"] for r in consent.collect()}
+    assert set(rates.values()) == {500, None}
+    assert rates == {
+        spec.host(fi): 500 if fi % 2 == 0 else None for fi in range(1, 5)
+    }

@@ -34,27 +34,6 @@ def test_window_slots(fetches):
     }
 
 
-def test_token_bucket_equals_window_for_uniform_arrivals(fetches):
-    w = politeness.assign_slots_window(fetches, ["page", "idx_in_page"])
-    t = politeness.assign_slots_token_bucket(fetches, ["page", "idx_in_page"])
-    key = ["hostname", "page", "idx_in_page"]
-    a = {tuple(r[k] for k in key): r["slot_ms"] for r in w.collect()}
-    b = {tuple(r[k] for k in key): r["slot_ms"] for r in t.collect()}
-    assert a == b
-
-
-def test_token_bucket_respects_arrivals(spark):
-    rows = [("h", 1, 0, 1000, 0), ("h", 1, 1, 1000, 5000), ("h", 1, 2, 1000, 5100)]
-    df = spark.createDataFrame(
-        rows, ["hostname", "page", "idx_in_page", "effective_rate_ms", "arrival"]
-    )
-    out = politeness.assign_slots_token_bucket(
-        df, ["page", "idx_in_page"], arrival_col="arrival"
-    )
-    slots = {r["idx_in_page"]: r["slot_ms"] for r in out.collect()}
-    assert slots == {0: 0, 1: 5000, 2: 6000}  # waits for arrival, then rate-spaced
-
-
 def test_split_by_budget(fetches):
     slotted = politeness.assign_slots_window(fetches, ["page", "idx_in_page"])
     sched, deferred = politeness.split_by_budget(slotted, budget_ms=2500)

@@ -63,22 +63,3 @@ def test_cuckoo_membership_property(keys):
     ct = CuckooTable(len(keys))
     inserted = [k for k in keys if ct.add(k)]
     assert ct.contains_vec(np.array(inserted, dtype=np.int64)).all()
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=10**6), min_size=1, max_size=200),
-    st.integers(min_value=1, max_value=5000),
-)
-@settings(max_examples=50, deadline=None)
-def test_token_bucket_closed_form(arrivals, rate):
-    """The vectorized closed form equals the sequential recurrence
-    slot[i] = max(arrival[i], slot[i-1] + rate)."""
-    arrivals = sorted(arrivals)
-    a = np.array(arrivals, dtype=np.int64)
-    idx = np.arange(len(a), dtype=np.int64)
-    vec = np.maximum.accumulate(a - idx * rate) + idx * rate
-    seq = []
-    for i, arr in enumerate(arrivals):
-        prev = seq[-1] + rate if seq else arr
-        seq.append(max(arr, prev))
-    assert list(vec) == seq

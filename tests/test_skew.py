@@ -1,6 +1,5 @@
 """Skew operators: salting, two-phase counters, skew-proof ranking."""
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -13,16 +12,6 @@ def test_with_salt_deterministic(spark):
     b = {(r["k"], r["salt"]) for r in skew.with_salt(df, 8, ["k"]).collect()}
     assert a == b
     assert all(0 <= s < 8 for _, s in a)
-
-
-def test_scaled_salt_widths(spark):
-    rows = [("mega", i) for i in range(10_000)] + [("tiny", i) for i in range(10)]
-    df = spark.createDataFrame(rows, ["hostname", "k"])
-    out = skew.scaled_salt(df, "hostname", ["k"], rows_per_task=1000, max_salt=64)
-    mega_salts = {r["salt"] for r in out.filter(F.col("hostname") == "mega").collect()}
-    tiny_salts = {r["salt"] for r in out.filter(F.col("hostname") == "tiny").collect()}
-    assert len(mega_salts) == 10  # ceil(10000/1000)
-    assert tiny_salts == {0}
 
 
 def test_two_phase_count_equals_plain(spark):
