@@ -1,7 +1,7 @@
 .PHONY: test test-fast package bench clean
 
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 test-fast:
 	python -m pytest tests/ -x -q -k "not e2e and not resume and not streaming"

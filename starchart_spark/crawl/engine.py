@@ -40,14 +40,15 @@ once ``now - last_crawl_on >= ttl`` (src/spider.rs:192-202).
 
 Scale: every table is keyed/bucketed by host_bucket = bucket(B, hostname);
 the fetch join and the seen anti-join are co-partitioned on it. Mega-host
-skew in the heavy stages is spread by scaled salting (operators/skew.py) and
-AQE skew-join. The documents "fetch" join stands in for the HTTP fetch; on a
-real crawl it becomes an ``applyInPandas`` per host bucket doing batched
-HTTP, same partitioning.
+skew is spread by a deterministic per-document salt on the documents layout
+(``_prep_docs``, skew.with_salt) and by AQE skew-join. The documents "fetch"
+join stands in for the HTTP fetch; on a real crawl it becomes an
+``applyInPandas`` per host bucket doing batched HTTP, same partitioning.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass
 
@@ -71,14 +72,30 @@ from starchart_spark.snapstore import SnapshotTable, _key_join, multi_commit
 ROBOTS_UA = "starchart"
 
 # seen-key hash preimage separator. \x01 cannot occur in hostnames or names,
-# so (kind, hostname, key1, key2) → string is injective. MUST be the same at
-# every hash site: the bloom filter stores mixes of _seen_keys' hashes and is
-# probed with the candidate-side hash — round 2 had the user-key site using
-# "" while _seen_keys used "\x01", which made every user-key bloom probe a
-# false negative (silently masked then by merge_insert's exact anti-join;
-# exposed when the single-action commit made the stored seen keys flow from
-# the probed candidates).
+# so (kind, hostname, key1, key2) → string is injective. The bloom filter is
+# built from stored hashes and probed with candidate hashes, so both must come
+# from one function, CrawlEngine._with_seen_key — round 2 had a second
+# user-key site hashing with "" instead, which made every user-key bloom probe
+# a false negative.
 KEY_SEP = "\x01"
+
+# url_seen key per key kind: the (key1, key2) source columns of its rows;
+# None stands for NULL
+SEEN_KEY_SOURCES = {
+    "forge": (None, None),
+    "user": ("username", None),
+    "repo": ("name", "owner"),
+    "media": ("media_ref", None),
+}
+
+# documents-layout salt width: a mega-forge's host_bucket would otherwise pin
+# ~its whole corpus share to ONE task (a real Iceberg scan splits a big bucket
+# by file size; the local repartition must emulate that). Deterministic
+# per-doc salt, so results never depend on it.
+DOC_SALT = 8
+
+# snapshots each table keeps through run()'s end-of-run expiry
+SNAPSHOT_KEEP = 50
 
 STATE = T.StructType(
     [
@@ -180,13 +197,7 @@ class CrawlSettings:
     # whole point).
     bloom_min_keys: int = 200_000
     max_batches: int = 10_000
-    snapshot_keep: int = 50
     ttl_s: int = 432_000  # crawler.ttl — re-crawl cycle (config/default.toml:35)
-    # salt width for the documents layout: a mega-forge's host_bucket would
-    # otherwise pin ~its whole corpus share to ONE task (a real Iceberg scan
-    # splits a big bucket by file size; the local repartition must emulate
-    # that). Deterministic per-doc salt, so results never depend on it.
-    doc_salt: int = 8
     # real-fetch mode (S3 real path): a picklable ``(url) -> spans | None``
     # transport (crawl/fetcher.py). None = sandbox documents-join stand-in.
     # With a transport, fetches are performed by per-host applyInPandas
@@ -250,9 +261,17 @@ class CrawlEngine:
         self._seen_total: int | None = None
         os.makedirs(warehouse, exist_ok=True)
         B = self.s.host_buckets
-        t = lambda name, schema, keys, bucket_by=None: SnapshotTable(  # noqa: E731
-            os.path.join(warehouse, name), schema, keys, bucket_by=bucket_by
-        )
+        # every table the engine owns, in creation order: the resume guard
+        # and the end-of-run expiry walk this list
+        self._tables: list[SnapshotTable] = []
+
+        def t(name, schema, keys, bucket_by=None) -> SnapshotTable:
+            tbl = SnapshotTable(
+                os.path.join(warehouse, name), schema, keys, bucket_by=bucket_by
+            )
+            self._tables.append(tbl)
+            return tbl
+
         # bucket_by enables matched-files-only MERGE on the mutable tables:
         # TTL stamping (_sync_forge_last_crawl) and entity deletes rewrite
         # only the touched host buckets, never O(table)
@@ -311,24 +330,67 @@ class CrawlEngine:
     def _bucket(self, col: str) -> F.Column:
         return host_bucket(col, self.s.host_buckets)
 
-    def _seen_keys(self, df: DataFrame, kind: str, key1, key2) -> DataFrame:
-        """Project entity rows to URL_SEEN rows (D1 canonicalize-then-hash:
-        hostname is already canonical here; hashing is JVM-side xxhash64)."""
-        out = df.select(
-            F.lit(kind).alias("key_kind"),
-            F.col("hostname"),
-            (key1 if key1 is not None else F.lit(None).cast("string")).alias("key1"),
-            (key2 if key2 is not None else F.lit(None).cast("string")).alias("key2"),
+    def _with_seen_key(self, df: DataFrame, kind: str) -> DataFrame:
+        """Append url_seen's key columns (key_kind, key1, key2, key_hash,
+        host_bucket) to rows of one key kind — the only place the seen-key
+        hash is built (D1 canonicalize-then-hash: hostname is already
+        canonical here; hashing is JVM-side xxhash64)."""
+        kind_col = F.lit(kind)
+        key1, key2 = (
+            F.col(c) if c else F.lit(None).cast("string")
+            for c in SEEN_KEY_SOURCES[kind]
         )
-        return out.withColumn(
-            "key_hash",
-            url_hash(F.concat_ws(KEY_SEP, "key_kind", "hostname", "key1", "key2")),
-        ).withColumn("host_bucket", self._bucket("hostname"))
+        return df.select(
+            "*",
+            kind_col.alias("key_kind"),
+            key1.alias("key1"),
+            key2.alias("key2"),
+            url_hash(
+                F.concat_ws(KEY_SEP, kind_col, F.col("hostname"), key1, key2)
+            ).alias("key_hash"),
+            self._bucket("hostname").alias("host_bucket"),
+        )
+
+    def _seen_key_rows(self, df: DataFrame, kind: str) -> DataFrame:
+        """Only the seen-key columns of ``_with_seen_key``."""
+        return self._with_seen_key(df, kind).select(
+            *self.url_seen.key_cols, "key_hash", "host_bucket"
+        )
+
+    def _entity_keys(self) -> DataFrame:
+        """Natural seen keys of every stored entity: users, repositories
+        and, when media keys ride the unified pass, media assets."""
+        sources = [(self.users, "user"), (self.repositories, "repo")]
+        if self.s.discover_media:
+            sources.append((self.media_assets, "media"))
+        # narrow to the key's source columns first: media_assets carries a
+        # host_bucket of its own, which _with_seen_key would duplicate
+        keys = [
+            self._with_seen_key(
+                tbl.read(self.spark).select(
+                    "hostname", *filter(None, SEEN_KEY_SOURCES[kind])
+                ),
+                kind,
+            ).select(*self.url_seen.key_cols)
+            for tbl, kind in sources
+        ]
+        return functools.reduce(DataFrame.unionByName, keys)
+
+    def _host_hll_part(self, seen_rows: DataFrame) -> tuple:
+        """The host_hll ledger append for url_seen rows entering the table."""
+        regs = sketch_mod.hll_registers(
+            seen_rows, "key_hash", ["hostname"], b=self.s.hll_b
+        ).select(
+            "hostname",
+            F.col("bucket").cast("int").alias("hll_bucket"),
+            F.col("rho").cast("int").alias("hll_rho"),
+        )
+        return (self.host_hll, regs, "append")
 
     def _new_against_seen(self, cands: DataFrame, bloom_filters) -> DataFrame:
         """Bloom-prefiltered exact anti-join against url_seen."""
         seen = self.url_seen.read(self.spark)
-        key_cols = ["key_kind", "hostname", "key1", "key2"]
+        key_cols = self.url_seen.key_cols
         if bloom_filters is not None:
             # pure-JVM probe; AQE picks the join by stats (one filter row
             # per bucket shuffles at 10^10 keys, broadcasts when tiny)
@@ -357,38 +419,10 @@ class CrawlEngine:
         new_keys, not confirmed), so the skip re-engages on a later run once
         imports are fully re-crawled. isEmpty() stops at the first
         counterexample."""
-        ent = (
-            self.users.read(self.spark)
-            .select(
-                F.lit("user").alias("key_kind"),
-                "hostname",
-                F.col("username").alias("key1"),
-                F.lit(None).cast("string").alias("key2"),
-            )
-            .unionByName(
-                self.repositories.read(self.spark).select(
-                    F.lit("repo").alias("key_kind"),
-                    "hostname",
-                    F.col("name").alias("key1"),
-                    F.col("owner").alias("key2"),
-                )
-            )
-        )
-        if self.s.discover_media:
-            # media keys ride the unified pass too, so the invariant must
-            # cover the media_assets table for the skip to stay sound
-            ent = ent.unionByName(
-                self.media_assets.read(self.spark).select(
-                    F.lit("media").alias("key_kind"),
-                    "hostname",
-                    F.col("media_ref").alias("key1"),
-                    F.lit(None).cast("string").alias("key2"),
-                )
-            )
         return _key_join(
-            ent,
+            self._entity_keys(),
             self.url_seen.read(self.spark),
-            ["key_kind", "hostname", "key1", "key2"],
+            self.url_seen.key_cols,
             "left_anti",
         ).isEmpty()
 
@@ -467,11 +501,10 @@ class CrawlEngine:
         fresh = _key_join(
             forge_rows, self.forges.read(self.spark), ["hostname"], "left_anti"
         )
-        keys = self._seen_keys(fresh, "forge", None, None)
         keys_fresh = _key_join(
-            keys,
+            self._seen_key_rows(fresh, "forge"),
             self.url_seen.read(self.spark),
-            ["key_kind", "hostname", "key1", "key2"],
+            self.url_seen.key_cols,
             "left_anti",
         )
         parts = [
@@ -482,19 +515,7 @@ class CrawlEngine:
             # the ledger must cover EVERY url_seen writer, or the fold
             # drifts from the table sketch — seed keys enter here, not
             # through a batch commit (test_host_telemetry fold-equality)
-            parts.append(
-                (
-                    self.host_hll,
-                    sketch_mod.hll_registers(
-                        keys_fresh, "key_hash", ["hostname"], b=self.s.hll_b
-                    ).select(
-                        "hostname",
-                        F.col("bucket").cast("int").alias("hll_bucket"),
-                        F.col("rho").cast("int").alias("hll_rho"),
-                    ),
-                    "append",
-                )
-            )
+            parts.append(self._host_hll_part(keys_fresh))
         if compiled_rules is not None:
             parts.append((self.robots_rules, compiled_rules, "overwrite"))
         parts.append((self.state, state, "overwrite"))
@@ -528,10 +549,9 @@ class CrawlEngine:
                 b_state = b
         if b_state is None:
             return
-        for tbl in (self.forges, self.users, self.repositories, self.url_seen,
-                    self.media_assets, self.lineage, self.visit_log,
-                    self.pending, self.bloom_state, self.body_cache,
-                    self.host_hll, self.fetch_log):
+        # state itself, robots_rules (batch 0) and aimd_state (no batch_id)
+        # never stand ahead of the watermark, so the walk leaves them be
+        for tbl in self._tables:
             while True:
                 cur = tbl.current_snapshot()
                 if cur is None:
@@ -594,7 +614,7 @@ class CrawlEngine:
         tests/test_skew.py asserts no partition exceeds 2x the median even
         with one host holding half the corpus."""
         docs = documents.withColumn("host_bucket", self._bucket("hostname"))
-        docs = skew.with_salt(docs, self.s.doc_salt, ["doc_id"], "__doc_salt")
+        docs = skew.with_salt(docs, DOC_SALT, ["doc_id"], "__doc_salt")
         return docs.repartition(
             self.s.host_buckets, "host_bucket", "__doc_salt"
         ).drop("__doc_salt")
@@ -666,12 +686,8 @@ class CrawlEngine:
             self._sync_forge_last_crawl()
         if docs is not None:
             docs.unpersist()
-        for tbl in (self.forges, self.users, self.repositories, self.url_seen,
-                    self.media_assets, self.lineage, self.visit_log, self.state,
-                    self.pending, self.bloom_state, self.body_cache,
-                    self.robots_rules, self.host_hll, self.fetch_log,
-                    self.aimd_state):
-            tbl.expire_snapshots(self.s.snapshot_keep)
+        for tbl in self._tables:
+            tbl.expire_snapshots(SNAPSHOT_KEEP)
         return {"batches": batches, "last_batch_id": batch_id}
 
     def _sync_forge_last_crawl(self) -> None:
@@ -898,29 +914,9 @@ class CrawlEngine:
 
         # 1. page-fetch URLs for each active host (JVM-side string build),
         # templated per forge type (N1 dispatch starts at URL construction)
-        page_url = (
-            F.when(
-                F.col("forge_type") == "github",
-                F.concat(
-                    F.lit("https://"), F.col("hostname"),
-                    F.lit("/search/repositories?q=forge&page="), F.col("next_page"),
-                    F.lit(f"&per_page={s.items_per_api_call}"),
-                ),
-            )
-            .when(
-                F.col("forge_type") == "sourcehut",
-                F.concat(
-                    F.lit("https://"), F.col("hostname"),
-                    F.lit("/api/repos?page="), F.col("next_page"),
-                ),
-            )
-            .otherwise(
-                F.concat(
-                    F.lit("https://"), F.col("hostname"),
-                    F.lit(f"{normalize.SEARCH_PATH}?page="), F.col("next_page"),
-                    F.lit(f"&limit={s.items_per_api_call}"),
-                )
-            )
+        page_url = normalize.url_col(
+            "search_url", F.col("forge_type"), host=F.col("hostname"),
+            page=F.col("next_page"), limit=s.items_per_api_call,
         )
         pages = active.select(
             "forge_id", "hostname", "forge_url", "forge_type", "next_page",
@@ -1022,16 +1018,19 @@ class CrawlEngine:
         repo_rows = parsed.join(meta, "doc_id").localCheckpoint(eager=True)
 
         # 3. politeness: fetch list = page fetch (idx 0) + one topics call per
-        # repo in page order (P1: ≥rate between calls within a host). Only
-        # gitea needs the second topics fetch; github ships topics inline and
-        # sourcehut has none (S4 is forge-type-specific). Hosts resuming a
-        # partially-fetched page contribute their carried-over rows instead.
-        all_topic_fetches = repo_rows.filter(F.col("forge_type") == "gitea").select(
+        # repo in page order (P1: ≥rate between calls within a host), for the
+        # forge types whose topics need a second fetch (S4 is
+        # forge-type-specific). Hosts resuming a partially-fetched page
+        # contribute their carried-over rows instead.
+        forge_type = F.col("forge_type")
+        all_topic_fetches = repo_rows.filter(
+            forge_type.isin(normalize.TOPIC_FETCH_TYPES)
+        ).select(
             "hostname", "forge_id", "page", "idx_in_page", "effective_rate_ms",
             "host_bucket",
-            F.concat(
-                F.lit("https://"), F.col("hostname"), F.lit("/api/v1/repos/"),
-                F.col("owner_username"), F.lit("/"), F.col("name"), F.lit("/topics"),
+            normalize.url_col(
+                "topics_url", forge_type, host=F.col("hostname"),
+                owner=F.col("owner_username"), name=F.col("name"),
             ).alias("doc_id"),
         )
         # per-URL robots decisions on the varying surface (topic URLs carry
@@ -1214,26 +1213,9 @@ class CrawlEngine:
         # per-kind keys — user (hostname, username), repo (hostname,
         # owner, name) — because key_kind discriminates, and window
         # partitioning groups NULL key2 values correctly.
-        def _keyed(df: DataFrame, kind: str, key1: str, key2: str | None) -> DataFrame:
-            return (
-                df.withColumn("key_kind", F.lit(kind))
-                .withColumn("key1", F.col(key1))
-                .withColumn(
-                    "key2",
-                    F.col(key2) if key2 else F.lit(None).cast("string"),
-                )
-                .withColumn(
-                    "key_hash",
-                    url_hash(
-                        F.concat_ws(KEY_SEP, "key_kind", "hostname", "key1", "key2")
-                    ),
-                )
-                .withColumn("host_bucket", self._bucket("hostname"))
-            )
-
-        ukey_cols = ["key_kind", "hostname", "key1", "key2"]
-        cands_keyed = _keyed(user_cands, "user", "username", None).unionByName(
-            _keyed(repo_cands, "repo", "name", "owner"), allowMissingColumns=True
+        ukey_cols = self.url_seen.key_cols
+        cands_keyed = self._with_seen_key(user_cands, "user").unionByName(
+            self._with_seen_key(repo_cands, "repo"), allowMissingColumns=True
         )
         if s.discover_media:
             # interleaved-media frontier: every completing page's media
@@ -1277,7 +1259,7 @@ class CrawlEngine:
                 )
             )
             cands_keyed = cands_keyed.unionByName(
-                _keyed(media_cands, "media", "media_ref", None),
+                self._with_seen_key(media_cands, "media"),
                 allowMissingColumns=True,
             )
         first = dedup.keep_first(
@@ -1298,34 +1280,8 @@ class CrawlEngine:
             # new_keys already excludes everything in url_seen ⊇ entities
             confirmed = new_keys
         else:
-            entity_keys = (
-                self.users.read(self.spark)
-                .select(
-                    F.lit("user").alias("key_kind"),
-                    "hostname",
-                    F.col("username").alias("key1"),
-                    F.lit(None).cast("string").alias("key2"),
-                )
-                .unionByName(
-                    self.repositories.read(self.spark).select(
-                        F.lit("repo").alias("key_kind"),
-                        "hostname",
-                        F.col("name").alias("key1"),
-                        F.col("owner").alias("key2"),
-                    )
-                )
-            )
-            if s.discover_media:
-                entity_keys = entity_keys.unionByName(
-                    self.media_assets.read(self.spark).select(
-                        F.lit("media").alias("key_kind"),
-                        "hostname",
-                        F.col("media_ref").alias("key1"),
-                        F.lit(None).cast("string").alias("key2"),
-                    )
-                )
             confirmed = _key_join(
-                new_keys, entity_keys, ukey_cols, "left_anti"
+                new_keys, self._entity_keys(), ukey_cols, "left_anti"
             ).persist()
         u_ins = confirmed.filter(F.col("key_kind") == "user").select(
             *[f.name for f in tables.USERS.fields]
@@ -1515,14 +1471,7 @@ class CrawlEngine:
             # guard make the append exactly-once, like visit_log), so the
             # read-side max-fold over the log equals the registers of the
             # whole url_seen table — no ledger read here, one extra groupBy
-            regs = sketch_mod.hll_registers(
-                seen_rows, "key_hash", ["hostname"], b=s.hll_b, portable=False
-            ).select(
-                "hostname",
-                F.col("bucket").cast("int").alias("hll_bucket"),
-                F.col("rho").cast("int").alias("hll_rho"),
-            )
-            parts.append((self.host_hll, regs, "append"))
+            parts.append(self._host_hll_part(seen_rows))
         if adaptive:
             # per-attempt outcomes for the AIMD controller: one row per
             # WIRE HIT this batch (cache-served rows carry a NULL outcome
@@ -1656,9 +1605,7 @@ class CrawlEngine:
         session regardless of when it's consumed, and the merge into
         url_seen reuses the same materialization."""
         _, del_rows = self.users.merge_delete(self.spark, keys)
-        seen_keys = self._seen_keys(
-            del_rows, "user", F.col("username"), None
-        ).localCheckpoint(eager=True)
+        seen_keys = self._seen_key_rows(del_rows, "user").localCheckpoint(eager=True)
         self.url_seen.merge_delete(self.spark, seen_keys)
         return seen_keys
 
@@ -1667,9 +1614,7 @@ class CrawlEngine:
         Result checkpointed for the same scratch-lifetime reason as
         ``delete_users``."""
         _, del_rows = self.repositories.merge_delete(self.spark, keys)
-        seen_keys = self._seen_keys(
-            del_rows, "repo", F.col("name"), F.col("owner")
-        ).localCheckpoint(eager=True)
+        seen_keys = self._seen_key_rows(del_rows, "repo").localCheckpoint(eager=True)
         self.url_seen.merge_delete(self.spark, seen_keys)
         return seen_keys
 

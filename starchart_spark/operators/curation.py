@@ -44,6 +44,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from . import dedup_text
+from . import text as text_ops
 from .text import token_count
 
 TOKEN_SPLIT = r"\s+"
@@ -69,21 +70,6 @@ def _jvm_tokens(t: str | None) -> list[str]:
     if t is None:
         return []
     return _JAVA_WS.split(t.strip(" "))
-
-
-def _ensure_min_partitions(df: DataFrame) -> DataFrame:
-    """Round-robin repartition ONLY when the scan is under-parallel.
-
-    The shingle explode multiplies rows ~tokens-per-doc×; when the input is
-    a single small file (the bench/test box), that CPU burn lands on one
-    task. A real 100 TB corpus arrives as ~10^5 input splits and this is a
-    no-op (the guard: input partitions already ≥ half the cluster's
-    parallelism) — so the shuffle this inserts is bounded by construction
-    to toy inputs, never the at-scale path.
-    """
-    from starchart_spark.operators import text as text_ops
-
-    return text_ops.ensure_min_partitions(df)
 
 
 def _ngram_array(text_col: Column, n: int) -> Column:
@@ -222,7 +208,7 @@ def contamination_hits(
     """
     if bench_pred is None:
         bench_pred = F.col(id_col) % 10 == 0
-    df = _ensure_min_partitions(df)
+    df = text_ops.ensure_min_partitions(df)
     bench_sh = (
         dedup_text.shingles(df.filter(bench_pred), id_col, text_col, n)
         .select("shingle")
@@ -255,7 +241,7 @@ def boilerplate_coverage(
     The scalar corpus count joins in as a broadcast single-row aggregate
     (no driver action).
     """
-    sh = dedup_text.shingles(_ensure_min_partitions(df), id_col, text_col, n)
+    sh = dedup_text.shingles(text_ops.ensure_min_partitions(df), id_col, text_col, n)
     n_docs = df.select(F.count("*").alias("__nd"))
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df"))
     boiler = (
@@ -316,7 +302,7 @@ def curated_corpus(
     # spread before the Arrow kernel: a single-file corpus scan would run
     # the whole repetition-ratio pass in ONE Python worker (guide §4 — the
     # kernel parallelizes per task); no-op when the scan already has splits
-    bound = _ensure_min_partitions(
+    bound = text_ops.ensure_min_partitions(
         df.filter(~bench_pred).select(
             F.col(id_col),
             token_count(text_col).alias("n_tokens"),

@@ -1,11 +1,17 @@
-"""Forge-type dispatch + wire-page normalization (SURVEY.md §2.4, N1-N3).
+"""Forge types + wire-page normalization (SURVEY.md §2.4, N1-N3).
 
 The reference instantiates a Rust trait object per forge type
-(/root/reference/src/spider.rs:38-42, forge/forge-core/src/lib.rs:115-121;
-Gitea is the only impl). Spark-first re-expression: forge_type is a *column*;
-a broadcast join attaches it from the seed table, and per-type parsers are
-plain DataFrame plans unioned together — no per-row dispatch, and Catalyst
-prunes the JSON parse to the consumed fields.
+(reference src/spider.rs:38-42, forge/forge-core/src/lib.rs:115-121;
+Gitea is the only impl). Here ``FORGE_TYPES`` is that trait table: one
+entry per type holding its search-page URL template, its topics URL
+template (None when topics come inline with the search page) and its
+search-page parser. Everything that builds a forge URL or picks a parser
+reads it: the engine's page and topic fetch columns (``url_col``, JVM string
+concats), the streaming frontier's topic visits and
+``parse_search_pages_typed``. GitHub/Sourcehut shapes follow the public APIs
+of those forges, slotted behind the same table. forge_type is a *column*:
+per-type parsers are plain DataFrame plans unioned together — no per-row
+dispatch, and Catalyst prunes the JSON parse to the consumed fields.
 
 Parsing itself is ``from_json`` against the declared wire schema
 (forge/gitea/src/schema.rs:22-151) — JVM-side, no Python in the loop.
@@ -20,24 +26,16 @@ before the first text span is taken — span order is the per-row invariant
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from starchart_spark import tables
 
 SEARCH_PATH = "/api/v1/repos/search"  # forge/gitea/src/lib.rs:31
-
-# per-forge-type search-page URL templates (the work-list shape of S3); the
-# reference only implements Gitea — GitHub/Sourcehut shapes follow the
-# public APIs of those forges, slotted behind the same dispatch (N1)
-SEARCH_TEMPLATES = {
-    "gitea": "/api/v1/repos/search?page={page}&limit={limit}",
-    "github": "/search/repositories?q=forge&page={page}&per_page={limit}",
-    "sourcehut": "/api/repos?page={page}",
-}
-
-# forge types whose wire pages already embed topics (no second fetch)
-INLINE_TOPIC_TYPES = {"github"}
 
 
 def first_text_span(df: DataFrame, out_col: str = "wire_json") -> DataFrame:
@@ -140,11 +138,68 @@ def parse_sourcehut_search_pages(search_docs: DataFrame) -> DataFrame:
     )
 
 
-PAGE_PARSERS = {
-    "gitea": parse_gitea_search_pages,
-    "github": parse_github_search_pages,
-    "sourcehut": parse_sourcehut_search_pages,
+@dataclass(frozen=True)
+class ForgeType:
+    """One forge type's wire API. URL templates are absolute, with
+    ``{host}`` (bare hostname), ``{page}`` and ``{limit}`` (page size) in the
+    search URL and ``{host}``, ``{owner}``, ``{name}`` in the topics URL."""
+
+    search_url: str
+    # None: topics arrive inline with the search page (or not at all), so
+    # the type has no per-repo second fetch (S4 is forge-type-specific)
+    topics_url: str | None
+    parse_page: Callable[[DataFrame], DataFrame]
+
+
+FORGE_TYPES = {
+    "gitea": ForgeType(
+        "https://{host}" + SEARCH_PATH + "?page={page}&limit={limit}",
+        "https://{host}/api/v1/repos/{owner}/{name}/topics",
+        parse_gitea_search_pages,
+    ),
+    "github": ForgeType(
+        "https://{host}/search/repositories?q=forge&page={page}&per_page={limit}",
+        None,
+        parse_github_search_pages,
+    ),
+    "sourcehut": ForgeType(
+        "https://{host}/api/repos?page={page}", None, parse_sourcehut_search_pages
+    ),
 }
+
+# the reference's only implementation: its URL shapes are the ELSE arm of
+# every per-type URL column, so a host of a type missing from FORGE_TYPES
+# fetches gitea's first search page, which parses to nothing, and drains
+DEFAULT_FORGE_TYPE = "gitea"
+
+TOPIC_FETCH_TYPES = [t for t, ft in FORGE_TYPES.items() if ft.topics_url is not None]
+
+
+def url_col(which: str, forge_type: Column, **fields) -> Column:
+    """One ``ForgeType`` URL (``which`` = "search_url" or "topics_url") per
+    row as a JVM-side ``concat``: ``CASE forge_type WHEN t THEN … ELSE
+    <DEFAULT_FORGE_TYPE's URL> END``. Column fields vary per row; any other
+    field is formatted into the literal text."""
+    urls = {}
+    for ftype, ft in FORGE_TYPES.items():
+        template = getattr(ft, which)
+        if template is None:
+            continue
+        for name, value in fields.items():
+            if not isinstance(value, Column):
+                template = template.replace("{" + name + "}", str(value))
+        # literal, field, literal, … — empty literals are left out
+        pieces = re.split(r"\{(\w+)\}", template)
+        urls[ftype] = F.concat(
+            *[fields[p] if i % 2 else F.lit(p)
+              for i, p in enumerate(pieces) if i % 2 or p]
+        )
+    default = urls.pop(DEFAULT_FORGE_TYPE)
+    out = None
+    for ftype, url in urls.items():
+        cond = forge_type == ftype
+        out = F.when(cond, url) if out is None else out.when(cond, url)
+    return default if out is None else out.otherwise(default)
 
 
 def parse_search_pages_typed(search_docs: DataFrame) -> DataFrame:
@@ -152,9 +207,11 @@ def parse_search_pages_typed(search_docs: DataFrame) -> DataFrame:
     unioned into one unified repo-row frame. Types with no rows prune to
     empty scans; unknown types yield nothing (callers may report them)."""
     parts = []
-    for ftype, parser in PAGE_PARSERS.items():
+    for ftype, ft in FORGE_TYPES.items():
         parts.append(
-            parser(search_docs.filter(F.col("forge_type") == ftype).drop("forge_type"))
+            ft.parse_page(
+                search_docs.filter(F.col("forge_type") == ftype).drop("forge_type")
+            )
         )
     out = parts[0]
     for p in parts[1:]:
@@ -225,18 +282,3 @@ def normalize_repositories(
         "page",
         "idx_in_page",
     )
-
-
-def dispatch(docs: DataFrame, seed_forges: DataFrame) -> DataFrame:
-    """N1: attach forge_type via broadcast join of the (tiny) seed table.
-
-    Parsers for other forge types (github, sourcehut) register here as they
-    land; unknown types surface as ``forge_type IS NULL`` rows the engine
-    reports rather than silently dropping (the reference panics with
-    ``unimplemented!``, src/spider.rs:41)."""
-    dims = seed_forges.select(
-        F.col("hostname").alias("forge_url"), "forge_type", "forge_id"
-    ).withColumn("host", F.regexp_extract("forge_url", r"^https?://([^/]+)/?", 1))
-    return docs.join(
-        F.broadcast(dims), docs["hostname"] == dims["host"], "left"
-    ).drop("host")

@@ -30,7 +30,7 @@ buffered page drains within the round its data arrives) and for
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator, Sequence
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -241,10 +241,11 @@ def make_frontier_fn(rate_ms: int | None = None, budget_ms: int | None = None):
     of the batch loop, state = next_page/active, spider.rs:65-122).
 
     Arriving page documents buffer by page number; the cursor walks
-    contiguous pages emitting the page visit (idx 0) and, for gitea, one
-    topic visit per repo in page order (S4); a zero-repo page is the A2
-    sentinel: its visit IS emitted, then the host drains (kind='drained'
-    carries the final next_page for end-state comparison).
+    contiguous pages emitting the page visit (idx 0) and, for the forge
+    types with a topics fetch (normalize.FORGE_TYPES), one topic visit per
+    repo in page order (S4); a zero-repo page is the A2 sentinel: its visit
+    IS emitted, then the host drains (kind='drained' carries the final
+    next_page for end-state comparison).
 
     **Politeness + budget parity (VERDICT r3 "do this" #3).** With
     ``budget_ms`` set, each invocation is one batch-engine micro-batch for
@@ -270,8 +271,14 @@ def make_frontier_fn(rate_ms: int | None = None, budget_ms: int | None = None):
     import json
     import math
 
+    from starchart_spark.operators import normalize
+
     budgeted = budget_ms is not None
     default_rate = int(rate_ms or 0)
+    # plain strings, so the pickled closure needs no package import
+    topics_urls = {
+        t: normalize.FORGE_TYPES[t].topics_url for t in normalize.TOPIC_FETCH_TYPES
+    }
 
     def _cap_for(rate: int) -> int | None:
         if budgeted and rate > 0:
@@ -320,10 +327,11 @@ def make_frontier_fn(rate_ms: int | None = None, budget_ms: int | None = None):
                 break
             repos = sorted(ent["repos"])
             fetches = [(0, ent["doc_id"])]
-            if forge_type == "gitea":  # S4: only gitea needs the topics fetch
+            topics_url = topics_urls.get(forge_type)
+            if topics_url is not None:  # S4: a second fetch per repo
                 for idx, owner, name in repos:
                     fetches.append(
-                        (idx, f"https://{host}/api/v1/repos/{owner}/{name}/topics")
+                        (idx, topics_url.format(host=host, owner=owner, name=name))
                     )
             remaining = fetches[done:]
             take = remaining if cap is None else remaining[:cap]
@@ -464,59 +472,6 @@ def streaming_exact_dedup(
         .withWatermark(ts_col, horizon)
         .dropDuplicatesWithinWatermark(["text_key"])
         .drop("text_key")
-    )
-
-
-def streaming_hll_registers(
-    docs_stream: DataFrame,
-    key_col: str,
-    group_cols: Sequence[str] = (),
-    b: int = 12,
-    portable: bool = False,
-) -> DataFrame:
-    """Continuous per-group distinct-cardinality registers over an
-    unbounded stream — the batch :func:`sketch.hll_registers` plan is
-    already a streaming-legal aggregation (projection + groupBy max), so
-    this is the SAME operator handed a ``readStream`` frame; run the sink
-    in **complete** (or update) output mode.
-
-    Why this is the streaming-native cardinality operator: state is the
-    register table itself — bounded by groups × 2^b rows FOREVER, however
-    long the stream runs (an exact streaming distinct would grow state
-    with every new key; `dropDuplicatesWithinWatermark` bounds state only
-    by evicting, losing old keys from the count). Registers are max-folds,
-    so restart/replay of any prefix is idempotent, and the table read at
-    any point estimates the distinct count of everything seen so far
-    (feed it to :func:`sketch.hll_sum`/``hll_estimate`` batch-side).
-    Parity with the batch registers on the same rows is asserted in
-    tests/test_streaming.py."""
-    from starchart_spark.operators import sketch
-
-    return sketch.hll_registers(
-        docs_stream, key_col, group_cols, b=b, portable=portable
-    )
-
-
-def streaming_cms(
-    docs_stream: DataFrame,
-    key_col: str,
-    d: int = 4,
-    w: int = 8192,
-    weight_col: str | None = None,
-    portable: bool = False,
-) -> DataFrame:
-    """Continuous count-min sketch over an unbounded stream — the batch
-    :func:`sketch.cms_build` plan (explode + groupBy sum) is streaming-
-    legal in complete/update mode; state is the d×w cell table FOREVER,
-    independent of stream length or key cardinality (an exact streaming
-    frequency table grows with every new key). Read the sink's cell table
-    with :func:`sketch.cms_lookup`/``cms_heavy_hitters`` batch-side —
-    sums merge, so restart/replay from a checkpoint is the same fold.
-    Batch parity asserted in tests/test_streaming.py."""
-    from starchart_spark.operators import sketch
-
-    return sketch.cms_build(
-        docs_stream, key_col, d=d, w=w, weight_col=weight_col, portable=portable
     )
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from starchart_spark import tables
 from starchart_spark.crawl.corpus import CorpusSpec, make_corpus
 from starchart_spark.crawl.engine import CrawlEngine, CrawlSettings
 from starchart_spark.testing import corpus_to_spark
@@ -251,10 +252,23 @@ def test_delete_then_recrawl_readds(spark, tmp_path_factory):
     eng.init_state(dfs["seed_forges"], dfs["consent"])
     eng.run(dfs["documents"], batch_time_s=50)
 
+    # the rows a delete returns are exactly the url_seen rows it removed,
+    # key_hash and host_bucket included: the delete path must build the
+    # same seen key as the batch that wrote it
+    seen_cols = [f.name for f in tables.URL_SEEN.fields]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(seen_cols).collect())
+
     repos = eng.repositories.read(spark)
     victim = repos.orderBy("name").limit(1)
     vrow = victim.collect()[0]
-    eng.delete_repositories(victim.select("hostname", "owner", "name"))
+    victim_seen = rows(eng.url_seen.read(spark).filter(
+        (F.col("key_kind") == "repo") & (F.col("key1") == vrow["name"])
+    ))
+    assert len(victim_seen) == 1
+    deleted = eng.delete_repositories(victim.select("hostname", "owner", "name"))
+    assert rows(deleted) == victim_seen
     assert eng.repositories.read(spark).filter(
         F.col("name") == vrow["name"]
     ).count() == 0
@@ -263,7 +277,10 @@ def test_delete_then_recrawl_readds(spark, tmp_path_factory):
     ).count() == 0
 
     users = eng.users.read(spark)
-    eng.delete_users(users.select("hostname", "username").limit(1))
+    user_seen = rows(eng.url_seen.read(spark).filter(F.col("key_kind") == "user"))
+    assert len(user_seen) == 1
+    deleted = eng.delete_users(users.select("hostname", "username").limit(1))
+    assert rows(deleted) == user_seen
     assert eng.users.read(spark).count() == 0  # single 'bot' user
     assert eng.url_seen.read(spark).filter(F.col("key_kind") == "user").count() == 0
 

@@ -343,7 +343,7 @@ def test_streaming_hll_registers_match_batch(spark, tmp_path):
         .parquet(drop_dir)
     )
     q = (
-        stream.streaming_hll_registers(src, "key", ["g"], b=8, portable=True)
+        sketch.hll_registers(src, "key", ["g"], b=8, portable=True)
         .writeStream.format("memory")
         .queryName("hll_regs")
         .outputMode("complete")
@@ -380,7 +380,7 @@ def test_streaming_cms_matches_batch(spark, tmp_path):
         .parquet(drop_dir)
     )
     q = (
-        stream.streaming_cms(src, "key", d=3, w=128, portable=True)
+        sketch.cms_build(src, "key", d=3, w=128, portable=True)
         .writeStream.format("memory")
         .queryName("cms_cells")
         .outputMode("complete")
