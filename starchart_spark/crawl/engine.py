@@ -58,7 +58,6 @@ from pyspark.sql import types as T
 
 from starchart_spark import tables
 from starchart_spark.functions.urls import canonicalize_udf, host_bucket, url_hash
-from starchart_spark.operators import aimd as aimd_mod
 from starchart_spark.operators import bloom as bloom_mod
 from starchart_spark.operators import dedup, multimodal, normalize, politeness, skew
 from starchart_spark.operators import robots as robots_mod
@@ -97,6 +96,10 @@ DOC_SALT = 8
 # snapshots each table keeps through run()'s end-of-run expiry
 SNAPSHOT_KEEP = 50
 
+# register precision of the host_hll ledger (track_host_distincts): m = 2^b
+# registers per host, relative error ≈ 1.04/√m — b=12 ⇒ ±1.6%
+HLL_B = 12
+
 STATE = T.StructType(
     [
         T.StructField("forge_id", T.LongType(), False),
@@ -128,7 +131,7 @@ VISIT_LOG = T.StructType(
 # fetches deferred by the politeness budget, carried to the next batch so a
 # partially-fetched page eventually completes (no tag loss, no livelock):
 # idx 0 (the page fetch itself) always schedules at slot 0, so pending rows
-# are topic fetches only
+# are topic fetches only (a transport fault fails the batch, it never defers)
 PENDING = T.StructType(
     [
         T.StructField("hostname", T.StringType(), False),
@@ -138,33 +141,6 @@ PENDING = T.StructType(
         T.StructField("effective_rate_ms", T.LongType(), False),
         T.StructField("host_bucket", T.IntegerType(), False),
         T.StructField("doc_id", T.StringType(), False),
-    ]
-)
-
-
-# adaptive mode: per-attempt fetch outcomes — the AIMD controller's input.
-# ``ts`` is a deterministic per-host ordering key (batch/page/idx encoding,
-# never wall time); ``ok`` is the wire outcome (true = the server answered,
-# including the 404 sentinel; false = transport fault). Cache-served bodies
-# never log an attempt — no wire was hit.
-FETCH_LOG = T.StructType(
-    [
-        T.StructField("batch_id", T.LongType(), False),
-        T.StructField("hostname", T.StringType(), False),
-        T.StructField("ts", T.LongType(), False),
-        T.StructField("ok", T.BooleanType(), False),
-    ]
-)
-
-# adaptive mode: persisted controller state, one row per host ever attempted.
-# base_rate_ms = the host's static pace (consent/robots merge) captured when
-# the host first entered the controller; rate_mu = the raw AIMD recursion
-# state carried between epochs (operators/aimd.py aimd_rates ``prior``).
-AIMD_STATE = T.StructType(
-    [
-        T.StructField("hostname", T.StringType(), False),
-        T.StructField("base_rate_ms", T.LongType(), False),
-        T.StructField("rate_mu", T.LongType(), False),
     ]
 )
 
@@ -222,22 +198,6 @@ class CrawlSettings:
     # the sketch of the whole table — see host_distinct_estimates(). Off by
     # default: default-mode plans stay byte-identical.
     track_host_distincts: bool = False
-    # register precision for the host_hll ledger (m = 2^b registers/host,
-    # rel. error ≈ 1.04/√m — b=12 ⇒ ±1.6%)
-    hll_b: int = 12
-    # adaptive per-host rate control (operators/aimd.py, Chiu & Jain 1989):
-    # transport mode only. When set, (a) transport faults are RECORDED
-    # (fetch_log table) instead of failing the batch — the failed fetch
-    # retries next batch through the pending-carryover machinery, exactly
-    # like a budget deferral, while completed work (the page body, sibling
-    # topic bodies) is never refetched (body_cache); and (b)
-    # ``adapt_rates()`` folds the logged outcomes into per-host AIMD state
-    # at each cycle boundary, re-pacing the frontier with
-    # effective_rate_ms = greatest(static rate, AIMD delay) — adaptation
-    # only ever slows a failing host below its consent/robots pace.
-    # None (default) keeps every plan byte-identical to reference-parity
-    # mode and lets transport faults propagate.
-    adaptive: "aimd_mod.AimdParams | None" = None
 
 
 class CrawlEngine:
@@ -318,12 +278,6 @@ class CrawlEngine:
         # per-host HLL register log (track_host_distincts mode): append-only,
         # folded on read — see host_distinct_registers()
         self.host_hll = t("host_hll", tables.HOST_HLL, [])
-        # adaptive mode (CrawlSettings.adaptive): per-attempt outcomes,
-        # appended per batch inside the same multi_commit; and the persisted
-        # AIMD controller state, overwritten by adapt_rates() at cycle
-        # boundaries (its snapshot summary carries the fold watermark)
-        self.fetch_log = t("fetch_log", FETCH_LOG, [])
-        self.aimd_state = t("aimd_state", AIMD_STATE, ["hostname"])
 
     # -- helpers ---------------------------------------------------------------
 
@@ -379,7 +333,7 @@ class CrawlEngine:
     def _host_hll_part(self, seen_rows: DataFrame) -> tuple:
         """The host_hll ledger append for url_seen rows entering the table."""
         regs = sketch_mod.hll_registers(
-            seen_rows, "key_hash", ["hostname"], b=self.s.hll_b
+            seen_rows, "key_hash", ["hostname"], b=HLL_B
         ).select(
             "hostname",
             F.col("bucket").cast("int").alias("hll_bucket"),
@@ -549,8 +503,8 @@ class CrawlEngine:
                 b_state = b
         if b_state is None:
             return
-        # state itself, robots_rules (batch 0) and aimd_state (no batch_id)
-        # never stand ahead of the watermark, so the walk leaves them be
+        # state itself and robots_rules (batch 0) never stand ahead of the
+        # watermark, so the walk leaves them be
         for tbl in self._tables:
             while True:
                 cur = tbl.current_snapshot()
@@ -641,9 +595,6 @@ class CrawlEngine:
         compares against ttl (P3, src/spider.rs:192-202).
         """
         self._batch_time_s = batch_time_s
-        if self.s.adaptive is not None and self.s.transport is None:
-            # outcomes come from the wire; the documents join cannot fail
-            raise ValueError("CrawlSettings.adaptive requires a transport")
         if self.s.transport is not None:
             # real-fetch mode: bodies come from the transport, not the
             # documents join; budget-deferred hosts carry fetched bodies
@@ -653,39 +604,44 @@ class CrawlEngine:
             if documents is None:
                 raise ValueError("documents is required without a transport")
             docs = self._prep_docs(documents).persist()
-        self._rollback_partial_batches()
-        # one cold-path job; sound to re-verify even after a foreign import
-        # (the check reads the data, and mid-run writers set the flag False)
-        self._entities_pure = self._entity_confirm_skippable()
-        batch_id = self._last_batch_id()
-        if self.s.bloom_min_keys > 0:
-            # one startup count seeds the driver-side engage threshold;
-            # per-batch growth comes from the observed url_seen inserts
-            self._seen_total = self.url_seen.read(self.spark).count()
-        self._ensure_bloom(batch_id)
         batches = 0
         limit = max_batches if max_batches is not None else self.s.max_batches
+        # a batch that raises commits nothing (state lands last) and must not
+        # leave its cached frames behind for a retrying caller to pile up
+        try:
+            self._rollback_partial_batches()
+            # one cold-path job; sound to re-verify even after a foreign
+            # import (the check reads the data, and mid-run writers set the
+            # flag False)
+            self._entities_pure = self._entity_confirm_skippable()
+            batch_id = self._last_batch_id()
+            if self.s.bloom_min_keys > 0:
+                # one startup count seeds the driver-side engage threshold;
+                # per-batch growth comes from the observed url_seen inserts
+                self._seen_total = self.url_seen.read(self.spark).count()
+            self._ensure_bloom(batch_id)
 
-        # the active-host count for batch k+1 is observed on batch k's
-        # commit write — only the FIRST iteration pays a count() job
-        n_active: int | None = None
-        while batches < limit:
-            state = self.state.read(self.spark)
-            active = state.filter(F.col("active")).persist()
-            if n_active is None:
-                n_active = active.count()
-            if n_active == 0:
-                active.unpersist()
-                break
-            batch_id += 1
-            batches += 1
-            n_active = self._run_batch(batch_id, active, docs)
-            active.unpersist()
+            # the active-host count for batch k+1 is observed on batch k's
+            # commit write — only the FIRST iteration pays a count() job
+            n_active: int | None = None
+            while batches < limit:
+                active = self.state.read(self.spark).filter(F.col("active")).persist()
+                try:
+                    if n_active is None:
+                        n_active = active.count()
+                    if n_active == 0:
+                        break
+                    batch_id += 1
+                    batches += 1
+                    n_active = self._run_batch(batch_id, active, docs)
+                finally:
+                    active.unpersist()
+        finally:
+            if docs is not None:
+                docs.unpersist()
 
         if batch_time_s is not None:
             self._sync_forge_last_crawl()
-        if docs is not None:
-            docs.unpersist()
         for tbl in self._tables:
             tbl.expire_snapshots(SNAPSHOT_KEEP)
         return {"batches": batches, "last_batch_id": batch_id}
@@ -735,109 +691,6 @@ class CrawlEngine:
             {"op": "reactivate", "now_s": now_s},
         )
 
-    def adapt_rates(self) -> dict:
-        """Cycle-boundary AIMD fold (CrawlSettings.adaptive): fold the fetch
-        outcomes logged since the last fold into the persisted per-host
-        controller state, then re-pace the frontier.
-
-        One epoch = the batches since the previous ``adapt_rates()`` call —
-        the fold watermark is the ``aimd_batch_id`` stamped into the
-        aimd_state snapshot summary, so each attempt is folded exactly once
-        and epochs chain through the controller state (the split-fold ≡
-        one-fold identity of operators/aimd.py). The frontier re-pace is
-        most-conservative-wins: ``effective_rate_ms = greatest(base static
-        rate, AIMD delay)`` — a failing host slows down (floor-halved mu ⇒
-        longer delay), a recovering host speeds back up additively but
-        never past its consent/robots base pace.
-
-        Idempotent across kills: a crash between the aimd_state commit and
-        the state re-pace leaves the watermark advanced; the re-run folds
-        zero new attempts, carries every host's state unchanged, and
-        recomputes the identical re-pace. Deployment loop::
-
-            eng.run(...)            # crawl cycle (fetch_log accumulates)
-            eng.adapt_rates()       # fold outcomes → re-pace frontier
-            eng.reactivate_due(t)   # TTL re-entry at the adapted pace
-            eng.run(...)            # next cycle
-        """
-        p = self.s.adaptive
-        if p is None:
-            raise ValueError("adapt_rates() requires CrawlSettings.adaptive")
-        snap = self.aimd_state.current_snapshot()
-        wm = snap.summary.get("aimd_batch_id") if snap is not None else None
-        new_wm = self._last_batch_id()
-        log = self.fetch_log.read(self.spark)
-        if isinstance(wm, int):
-            log = log.filter(F.col("batch_id") > wm)
-        prior = self.aimd_state.read(self.spark) if snap is not None else None
-        rates = aimd_mod.aimd_rates(
-            log.select("hostname", "ts", "ok"),
-            r0_mu=p.r0_mu, add_mu=p.add_mu, min_mu=p.min_mu, max_mu=p.max_mu,
-            prior=prior.select("hostname", "rate_mu") if prior is not None else None,
-        )
-        # hosts attempted this epoch: fold result; base = their existing
-        # base, else their static pace from the frontier state (captured
-        # once — consent/robots never change mid-cycle). Hosts without
-        # attempts carry unchanged.
-        bases = (
-            prior.select("hostname", "base_rate_ms")
-            if prior is not None
-            else self.spark.createDataFrame(
-                [], "hostname string, base_rate_ms long"
-            )
-        )
-        statics = self.state.read(self.spark).select(
-            "hostname", F.col("effective_rate_ms").alias("__static")
-        )
-        fresh = (
-            rates.select("hostname", "rate_mu")
-            .join(bases, "hostname", "left")
-            .join(statics, "hostname", "left")
-            .select(
-                "hostname",
-                F.coalesce(
-                    "base_rate_ms", "__static", F.lit(int(self.s.rate_ms))
-                ).cast("long").alias("base_rate_ms"),
-                F.col("rate_mu").cast("long").alias("rate_mu"),
-            )
-        )
-        carried = (
-            prior.join(rates.select("hostname"), "hostname", "left_anti")
-            if prior is not None
-            else self.spark.createDataFrame([], AIMD_STATE)
-        )
-        # materialize BEFORE the overwrite — both frames read aimd_state
-        new_aimd = fresh.unionByName(carried).localCheckpoint(eager=True)
-        self.aimd_state.overwrite(new_aimd, {"aimd_batch_id": new_wm})
-        # frontier re-pace: dim-sized broadcast join onto the state table.
-        # delay = 1e6 div clamp(rate_mu, min, max) — aimd.to_delay_ms's
-        # arithmetic over the clamped applied rate
-        pace = new_aimd.select(
-            "hostname",
-            F.greatest(
-                F.col("base_rate_ms"),
-                F.expr(
-                    f"CAST(1000000 div greatest(least(rate_mu, {int(p.max_mu)}),"
-                    f" {int(p.min_mu)}) AS BIGINT)"
-                ),
-            ).alias("__eff"),
-        )
-        st = self.state.read(self.spark)
-        repaced = st.join(F.broadcast(pace), "hostname", "left").select(
-            "forge_id", "hostname", "forge_url", "forge_type", "next_page",
-            "active",
-            F.coalesce("__eff", "effective_rate_ms").alias("effective_rate_ms"),
-            "host_bucket", "last_crawl_on",
-            (F.coalesce("__eff", "effective_rate_ms")
-             != F.col("effective_rate_ms")).alias("_due"),
-        )
-        n = self.state.overwrite_if(
-            repaced,
-            F.sum(F.col("_due").cast("long")).alias("n"),
-            {"op": "adapt_rates", "aimd_batch_id": new_wm},
-        )
-        return {"hosts_repaced": n, "folded_through_batch": new_wm}
-
     # -- one micro-batch -----------------------------------------------------------
 
     def _run_batch(self, batch_id: int, active: DataFrame, docs: DataFrame) -> int:
@@ -851,8 +704,57 @@ class CrawlEngine:
         rare overfull-bucket bloom rebuild and the one-time filter rebuild
         when the seen set first crosses the engage threshold (the
         threshold check itself is driver-side metadata).
+
+        Every frame the batch persists is unpersisted on the way out, also
+        when the batch raises.
         """
+        persisted: list[DataFrame] = []
+        try:
+            got = self._commit_batch(batch_id, active, docs, persisted)
+        finally:
+            for df in persisted:
+                df.unpersist()
+        if self._seen_total is not None:
+            self._seen_total += int(got.get("n_url_seen") or 0)
+
+        # rare path: a bucket outgrew its bitmap — rebuild just that bucket
+        # (n_overfull is observed only while the bloom layer is engaged)
+        if int(got.get("n_overfull") or 0) > 0:
+            over = [
+                int(r["host_bucket"])
+                for r in bloom_mod.overfull(
+                    self.bloom_state.read(self.spark)
+                ).collect()
+            ]
+            if over:
+                cur = self.bloom_state.read(self.spark)
+                rebuilt = bloom_mod.build(
+                    self.url_seen.read(self.spark).filter(
+                        F.col("host_bucket").isin(over)
+                    )
+                )
+                self.bloom_state.overwrite(
+                    cur.filter(~F.col("host_bucket").isin(over)).unionByName(rebuilt),
+                    {"batch_id": batch_id, "rebuilt_buckets": len(over)},
+                )
+        return int(got.get("n_active_next") or 0)
+
+    def _commit_batch(
+        self,
+        batch_id: int,
+        active: DataFrame,
+        docs: DataFrame,
+        persisted: list[DataFrame],
+    ) -> dict:
+        """Declare the batch's commit DAG and run its multi_commit; returns
+        the observed metrics. Every frame persisted here is appended to
+        ``persisted`` for the caller to release."""
         s = self.s
+
+        def persist(df: DataFrame) -> DataFrame:
+            persisted.append(df.persist())
+            return df
+
         # 0. fetches deferred by the politeness budget in earlier batches:
         # hosts with pending rows resume their partially-fetched page instead
         # of opening a new one (their next_page never advanced).
@@ -867,14 +769,8 @@ class CrawlEngine:
         # small-batch wall-clock is made of (Catalyst + stage scheduling,
         # not data).
         pending_snap = self.pending.current_snapshot()
-        # adaptive mode always runs the full deferral machinery: failed
-        # fetches re-enter through the pending table, so the "pending is
-        # dead code" premise of the slim path does not hold
-        adaptive = s.adaptive is not None and s.transport is not None
-        slim = (
-            s.budget_ms is None
-            and not adaptive
-            and (pending_snap is None or not pending_snap.data_files)
+        slim = s.budget_ms is None and (
+            pending_snap is None or not pending_snap.data_files
         )
         if slim:
             pending = pending_hosts = None
@@ -948,35 +844,14 @@ class CrawlEngine:
                 if slim
                 else self.body_cache.read(self.spark)
             )
-            wave1_in = anti_pending(pages)
-            if adaptive:
-                # a pending idx-0 row is a FAILED page fetch (budget
-                # deferrals never defer idx 0) — its body is not in the
-                # cache, so the page must be REFETCHED, not cache-resumed
-                pend_page_urls = pending.filter(
-                    F.col("idx_in_page") == 0
-                ).select("doc_id")
-                wave1_in = wave1_in.unionByName(
-                    pages.join(pend_page_urls, "doc_id", "left_semi")
-                )
             fetched_fresh = fetcher.fetch_batch(
-                wave1_in.withColumn("slot_ms", F.lit(0).cast("long")),
+                anti_pending(pages).withColumn("slot_ms", F.lit(0).cast("long")),
                 s.transport,
-                record_outcomes=adaptive,
             ).drop("slot_ms", "sent_at_ms")
             if not slim:
-                resumed = pages.join(pending_hosts, "hostname", "left_semi")
-                if adaptive:
-                    resumed = resumed.join(pend_page_urls, "doc_id", "left_anti")
-                resumed = resumed.join(
+                resumed = pages.join(pending_hosts, "hostname", "left_semi").join(
                     cache.select("doc_id", "spans"), "doc_id", "left"
                 )
-                if adaptive:
-                    # cache-served: no wire hit, no attempt — NULL outcome
-                    # keeps these rows out of the fetch_log
-                    resumed = resumed.withColumn(
-                        "fetch_ok", F.lit(None).cast("boolean")
-                    )
                 fetched_fresh = fetched_fresh.unionByName(resumed)
             # localCheckpoint (eager): materializes the wave NOW and cuts
             # the lineage, so no downstream branch re-evaluation can ever
@@ -988,13 +863,15 @@ class CrawlEngine:
         else:
             # lazy persist: the fetch join feeds the parse chain, the page
             # scheduling AND the termination status — one materialization
-            fetched_pages = pages.join(
-                docs.select("doc_id", "spans", "host_bucket").withColumnRenamed(
-                    "host_bucket", "hb_doc"
-                ),
-                "doc_id",
-                "left",
-            ).drop("hb_doc").persist()
+            fetched_pages = persist(
+                pages.join(
+                    docs.select("doc_id", "spans", "host_bucket").withColumnRenamed(
+                        "host_bucket", "hb_doc"
+                    ),
+                    "doc_id",
+                    "left",
+                ).drop("hb_doc")
+            )
 
         parsed = normalize.parse_search_pages_typed(
             fetched_pages.filter(F.col("spans").isNotNull()).select(
@@ -1046,22 +923,7 @@ class CrawlEngine:
             F.lit(0).alias("idx_in_page"),
             "effective_rate_ms", "host_bucket", "doc_id",
         )
-        if adaptive:
-            # a retried-page host (pending idx-0 row) discovers its topics
-            # only NOW — exclude fresh topic fetches only for hosts whose
-            # topic list was already enumerated into pending (idx>0 rows);
-            # non-adaptive pending rows are topics-only, where this reduces
-            # to the plain pending-host anti-join below
-            pend_topic_hosts = (
-                pending.filter(F.col("idx_in_page") > 0)
-                .select("hostname").distinct()
-            )
-            topic_sched = all_topic_fetches.join(
-                pend_topic_hosts, "hostname", "left_anti"
-            )
-        else:
-            topic_sched = anti_pending(all_topic_fetches)
-        all_fetches = page_fetches.unionByName(topic_sched)
+        all_fetches = page_fetches.unionByName(anti_pending(all_topic_fetches))
         if not slim:
             all_fetches = all_fetches.unionByName(
                 pending.select(*[f.name for f in PENDING.fields])
@@ -1075,88 +937,40 @@ class CrawlEngine:
             all_fetches, order_cols=["page", "idx_in_page"]
         )
         scheduled, deferred = politeness.split_by_budget(slotted, s.budget_ms)
-        scheduled = scheduled.persist()
+        scheduled = persist(scheduled)
         if not slim:
-            deferred = deferred.persist()
+            deferred = persist(deferred)
         # a page completes only when EVERY one of its fetches has been
         # scheduled: ANY deferred fetch keeps the host on its current page
         # and postpones the page's entity merge (the reference processes a
         # page's CrawlResp only after all its topic calls finished,
         # forge/gitea/src/lib.rs:74-172). idx 0 always schedules at slot 0,
         # so the carried rows are topic fetches only and progress is
-        # guaranteed for any budget > 0.
-        pending_out = None
-        failed_ids = None
-        if slim:
-            # budget None ⇒ nothing defers, by construction of split_by_budget
-            deferred_hosts = None
-            sched_repo_rows = repo_rows.persist()
-            topic_docs = all_topic_fetches
-        elif not adaptive:
-            deferred_hosts = deferred.select("hostname").distinct()
-            sched_repo_rows = repo_rows.join(
-                deferred_hosts, "hostname", "left_anti"
-            ).persist()
-            # 4. topics "fetch" + parse + J4 grouped join (no N+1). For pages
-            # completing this batch the full topic list is re-derived and
-            # joined against docs — a pure function, regardless of which
-            # batch actually scheduled each topic fetch.
-            topic_docs = all_topic_fetches.join(
-                deferred_hosts, "hostname", "left_anti"
-            )
-        # adaptive: deferred_hosts/topic_docs are derived AFTER the topic
-        # wave, once fetch outcomes exist — a transport fault defers its
-        # host exactly like a budget deferral (retry via pending)
+        # guaranteed for any budget > 0. Slim: budget None ⇒ nothing
+        # defers, by construction of split_by_budget.
+        deferred_hosts = None if slim else deferred.select("hostname").distinct()
+
+        def completing(df: DataFrame) -> DataFrame:
+            """Rows of the hosts whose page completes this batch."""
+            return df if slim else df.join(deferred_hosts, "hostname", "left_anti")
+
+        sched_repo_rows = persist(completing(repo_rows))
+        # 4. topics "fetch" + parse + J4 grouped join (no N+1). For pages
+        # completing this batch the full topic list is re-derived and
+        # joined against docs — a pure function, regardless of which
+        # batch actually scheduled each topic fetch.
+        topic_docs = completing(all_topic_fetches)
         if s.transport is not None:
             # wave 2: real topic fetches, honoring the token-bucket slots
             # (slot i·rate relative to the wave start — spacing is always
             # ≥ rate, conservative vs the reference's in-line timeline).
             # A completing page's bodies come from this wave PLUS the body
             # cache (topic rows its host fetched in earlier batches before
-            # the budget deferred it).
-            from starchart_spark.crawl import fetcher
-
-            # same durability contract as the page wave above
+            # the budget deferred it). Same durability contract as the page
+            # wave above.
             fetched_topics = fetcher.fetch_batch(
-                scheduled.filter(F.col("idx_in_page") > 0),
-                s.transport,
-                record_outcomes=adaptive,
+                scheduled.filter(F.col("idx_in_page") > 0), s.transport
             ).localCheckpoint(eager=True)
-            if adaptive:
-                # transport faults (fetch_ok=false): the row re-enters via
-                # the pending table and retries next batch; cache-served
-                # rows (NULL outcome) never re-fetch. The pending overwrite
-                # carries budget deferrals ∪ failures; lineage's
-                # deferred_by_politeness stays budget-only (failures are
-                # the fetch_log's story, not a politeness event).
-                failed_rows = (
-                    fetched_pages.filter(~F.col("fetch_ok"))
-                    .select(
-                        "hostname", "forge_id",
-                        F.col("next_page").cast("int").alias("page"),
-                        F.lit(0).cast("int").alias("idx_in_page"),
-                        "effective_rate_ms", "host_bucket", "doc_id",
-                    )
-                    .unionByName(
-                        fetched_topics.filter(~F.col("fetch_ok")).select(
-                            "hostname", "forge_id",
-                            F.col("page").cast("int").alias("page"),
-                            F.col("idx_in_page").cast("int").alias("idx_in_page"),
-                            "effective_rate_ms", "host_bucket", "doc_id",
-                        )
-                    )
-                )
-                failed_ids = failed_rows.select("doc_id")
-                pending_out = deferred.select(
-                    *[f.name for f in PENDING.fields]
-                ).unionByName(failed_rows.select(*[f.name for f in PENDING.fields]))
-                deferred_hosts = pending_out.select("hostname").distinct()
-                sched_repo_rows = repo_rows.join(
-                    deferred_hosts, "hostname", "left_anti"
-                ).persist()
-                topic_docs = all_topic_fetches.join(
-                    deferred_hosts, "hostname", "left_anti"
-                )
             bodies = (
                 fetched_topics.select("doc_id", "spans")
                 .unionByName(cache.select("doc_id", "spans"))
@@ -1183,7 +997,7 @@ class CrawlEngine:
         # parse→normalize→dedup pipeline once per branch. All persists are
         # lazy — the batch still triggers exactly ONE action.
         user_cands = normalize.normalize_users(sched_repo_rows)
-        repo_cands = normalize.normalize_repositories(sched_repo_rows, topics).persist()
+        repo_cands = persist(normalize.normalize_repositories(sched_repo_rows, topics))
 
         # 6. seen filter (bloom prefilter when engaged + exact anti-join)
         # and MERGE sinks.
@@ -1224,11 +1038,9 @@ class CrawlEngine:
             # Same completion gate as the entity merges: a budget-deferred
             # host's page re-derives its media refs (a pure function of the
             # body) in the batch that finally completes it.
-            completed = fetched_pages if slim else fetched_pages.join(
-                deferred_hosts, "hostname", "left_anti"
-            )
             media_cands = (
-                completed.filter(F.col("spans").isNotNull())
+                completing(fetched_pages)
+                .filter(F.col("spans").isNotNull())
                 .select(
                     F.col("next_page").alias("page"),
                     F.explode(
@@ -1262,11 +1074,11 @@ class CrawlEngine:
                 self._with_seen_key(media_cands, "media"),
                 allowMissingColumns=True,
             )
-        first = dedup.keep_first(
-            cands_keyed, ukey_cols, ["page", "idx_in_page"]
-        ).persist()
+        first = persist(
+            dedup.keep_first(cands_keyed, ukey_cols, ["page", "idx_in_page"])
+        )
         # new vs url_seen (crawl semantics) ...
-        new_keys = self._new_against_seen(first, bloom_filters).persist()
+        new_keys = persist(self._new_against_seen(first, bloom_filters))
         # ... and vs the entity tables themselves (kill-replay idempotency:
         # a crash after the entity commit but before url_seen's replays
         # this batch; this anti-join suppresses the double insert while the
@@ -1280,9 +1092,9 @@ class CrawlEngine:
             # new_keys already excludes everything in url_seen ⊇ entities
             confirmed = new_keys
         else:
-            confirmed = _key_join(
-                new_keys, self._entity_keys(), ukey_cols, "left_anti"
-            ).persist()
+            confirmed = persist(
+                _key_join(new_keys, self._entity_keys(), ukey_cols, "left_anti")
+            )
         u_ins = confirmed.filter(F.col("key_kind") == "user").select(
             *[f.name for f in tables.USERS.fields]
         )
@@ -1310,16 +1122,7 @@ class CrawlEngine:
         # 7. visit log (pure-function crawl order evidence): every scheduled
         # fetch was actually performed this batch and is logged exactly once
         # — carried-over rows log in the batch that finally schedules them.
-        # Adaptive mode: a FAILED fetch completes nothing — it logs in the
-        # batch where its retry succeeds, so the visit log stays exactly-
-        # once per URL per cycle whatever the fault pattern (the failed
-        # attempt itself is the fetch_log's record).
-        completed_sched = (
-            scheduled.join(failed_ids, "doc_id", "left_anti")
-            if failed_ids is not None
-            else scheduled
-        )
-        visits = completed_sched.select(
+        visits = scheduled.select(
             F.lit(batch_id).alias("batch_id"),
             "forge_id", "hostname", "page", "idx_in_page", "doc_id",
         )
@@ -1346,8 +1149,7 @@ class CrawlEngine:
             else confirmed
         )
         tagged = (
-            # adaptive: 'fetched' counts completed calls, like the visit log
-            _tagged(completed_sched, "f", True)
+            _tagged(scheduled, "f", True)
             # user candidates count post-keep-first, repo candidates
             # pre-keep-first — the reference's dedup accounting; both read
             # from already-persisted intermediates, no recompute
@@ -1472,56 +1274,17 @@ class CrawlEngine:
             # read-side max-fold over the log equals the registers of the
             # whole url_seen table — no ledger read here, one extra groupBy
             parts.append(self._host_hll_part(seen_rows))
-        if adaptive:
-            # per-attempt outcomes for the AIMD controller: one row per
-            # WIRE HIT this batch (cache-served rows carry a NULL outcome
-            # and are excluded). ts is a deterministic per-host ordering
-            # key — (batch, page, idx) encoded into one long, never wall
-            # time — so the cycle-boundary fold replays identically.
-            att = (
-                fetched_pages.filter(F.col("fetch_ok").isNotNull())
-                .select(
-                    "hostname",
-                    (F.col("next_page").cast("long") * F.lit(1_000_000)).alias(
-                        "__o"
-                    ),
-                    F.col("fetch_ok").alias("ok"),
-                )
-                .unionByName(
-                    fetched_topics.select(
-                        "hostname",
-                        (
-                            F.col("page").cast("long") * F.lit(1_000_000)
-                            + F.col("idx_in_page")
-                        ).alias("__o"),
-                        F.col("fetch_ok").alias("ok"),
-                    )
-                )
-                .select(
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                    "hostname",
-                    (
-                        F.lit(batch_id).cast("long") * F.lit(1_000_000_000_000)
-                        + F.col("__o")
-                    ).alias("ts"),
-                    "ok",
-                )
-            )
-            parts.append((self.fetch_log, att, "append"))
         parts += [
             (self.visit_log, visits, "append"),
             (self.lineage, lineage, "append"),
         ]
         if not slim:
             # slim mode never defers, so pending stays the empty table it
-            # already is — no need to overwrite it every batch. Adaptive:
-            # budget deferrals ∪ failed fetches (the retry carryover).
+            # already is — no need to overwrite it every batch
             parts.append(
                 (
                     self.pending,
-                    pending_out
-                    if pending_out is not None
-                    else deferred.select(*[f.name for f in PENDING.fields]),
+                    deferred.select(*[f.name for f in PENDING.fields]),
                     "overwrite",
                 )
             )
@@ -1544,47 +1307,13 @@ class CrawlEngine:
                     1,
                 ).otherwise(0)
             )
-        got = multi_commit(
+        return multi_commit(
             self.spark,
             os.path.join(self.warehouse, "_staging", f"batch_{batch_id}"),
             parts,
             {"batch_id": batch_id},
             extra_metrics=extra,
         )
-        if self._seen_total is not None:
-            self._seen_total += int(got.get("n_url_seen") or 0)
-
-        scheduled.unpersist()
-        if not slim:
-            deferred.unpersist()
-        sched_repo_rows.unpersist()
-        repo_cands.unpersist()
-        first.unpersist()
-        new_keys.unpersist()
-        confirmed.unpersist()
-        if s.transport is None:
-            fetched_pages.unpersist()
-
-        # rare path: a bucket outgrew its bitmap — rebuild just that bucket
-        if engaged and int(got.get("n_overfull") or 0) > 0:
-            over = [
-                int(r["host_bucket"])
-                for r in bloom_mod.overfull(
-                    self.bloom_state.read(self.spark)
-                ).collect()
-            ]
-            if over:
-                cur = self.bloom_state.read(self.spark)
-                rebuilt = bloom_mod.build(
-                    self.url_seen.read(self.spark).filter(
-                        F.col("host_bucket").isin(over)
-                    )
-                )
-                self.bloom_state.overwrite(
-                    cur.filter(~F.col("host_bucket").isin(over)).unionByName(rebuilt),
-                    {"batch_id": batch_id, "rebuilt_buckets": len(over)},
-                )
-        return int(got.get("n_active_next") or 0)
 
     # -- deletes (delete_user / delete_repository parity) ------------------------------
 
@@ -1670,7 +1399,7 @@ class CrawlEngine:
         and the standard HLL limitation (a decayed window would keep
         per-epoch ledgers and fold the live ones)."""
         return sketch_mod.hll_estimate_from_registers(
-            self.host_distinct_registers(), ["hostname"], b=self.s.hll_b
+            self.host_distinct_registers(), ["hostname"], b=HLL_B
         )
 
     def crawl_order(self) -> DataFrame:

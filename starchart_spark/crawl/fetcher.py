@@ -50,7 +50,6 @@ def fetch_batch(
     host_col: str = "hostname",
     url_col: str = "doc_id",
     rate_col: str = "effective_rate_ms",
-    record_outcomes: bool = False,
 ) -> DataFrame:
     """Fetch every scheduled row, per host in slot order, honoring slots.
 
@@ -67,29 +66,24 @@ def fetch_batch(
     (null for missing pages) + ``sent_at_ms`` (actual send time relative to
     the group t0, for audit/tests).
 
-    ``record_outcomes`` — the adaptive-crawl contract (operators/aimd.py):
-    a transport exception (timeout, 5xx, connection reset) is CAUGHT and
-    recorded instead of failing the Spark task — the row comes back with
-    ``spans`` null and a new ``fetch_ok=false`` column; a call that returns
-    (including the 404 → ``None`` termination sentinel: the server answered,
-    it is healthy) gets ``fetch_ok=true``. The engine's adaptive mode feeds
-    these outcomes to the AIMD rate controller and retries failed fetches
-    via the pending-carryover machinery. Off (the default), exceptions
-    propagate — a reference-parity crawl treats transport faults as fatal.
+    A transport exception (timeout, 5xx, connection reset) fails the Spark
+    task and with it the batch, as in the reference, which treats a fetch
+    error as fatal. The engine commits nothing for a failed batch, so the
+    next ``CrawlEngine.run()`` retries it from the last committed one.
     """
-    out_fields = scheduled.schema.fields + [
-        T.StructField("spans", SPANS_TYPE, True),
-        T.StructField("sent_at_ms", T.LongType(), False),
-    ]
-    if record_outcomes:
-        out_fields = out_fields + [T.StructField("fetch_ok", T.BooleanType(), False)]
-    out_schema = T.StructType(out_fields)
+    out_schema = T.StructType(
+        scheduled.schema.fields
+        + [
+            T.StructField("spans", SPANS_TYPE, True),
+            T.StructField("sent_at_ms", T.LongType(), False),
+        ]
+    )
     has_rate = rate_col in scheduled.columns
 
     def _fetch(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(slot_col, kind="mergesort").reset_index(drop=True)
         t0 = time.monotonic()
-        spans_out, sent, oks = [], [], []
+        spans_out, sent = [], []
         prev_send_s = None
         for i in range(len(pdf)):
             target_s = float(pdf[slot_col].iloc[i]) / 1000.0
@@ -102,20 +96,10 @@ def fetch_batch(
             if now_s < target_s:
                 time.sleep(target_s - now_s)
             prev_send_s = time.monotonic() - t0
-            if record_outcomes:
-                try:
-                    spans_out.append(transport(pdf[url_col].iloc[i]))
-                    oks.append(True)
-                except Exception:
-                    spans_out.append(None)
-                    oks.append(False)
-            else:
-                spans_out.append(transport(pdf[url_col].iloc[i]))
+            spans_out.append(transport(pdf[url_col].iloc[i]))
             sent.append(int(prev_send_s * 1000))
         pdf["spans"] = spans_out
         pdf["sent_at_ms"] = sent
-        if record_outcomes:
-            pdf["fetch_ok"] = oks
         return pdf
 
     return scheduled.groupBy(host_col).applyInPandas(_fetch, out_schema)

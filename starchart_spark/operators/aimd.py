@@ -46,30 +46,10 @@ right-shift, exact for the non-negative rates the recursion maintains.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass(frozen=True)
-class AimdParams:
-    """Controller constants for the engine's adaptive mode
-    (``CrawlSettings.adaptive``). One epoch = one engine crawl cycle: the
-    per-batch fetch outcomes land in the ``fetch_log`` table, and
-    ``CrawlEngine.adapt_rates()`` folds the new rows into the persisted
-    controller state at the cycle boundary (epoch chaining through the
-    ``prior`` argument of :func:`aimd_rates`). The merge into the frontier
-    is most-conservative-wins — ``effective_rate_ms = greatest(static
-    consent/robots rate, AIMD delay)`` — so adaptation only ever SLOWS a
-    failing host below its static pace and additive increase recovers it
-    back toward (never past) that pace: politeness-safe by construction."""
-
-    r0_mu: int = 1_000
-    add_mu: int = 50
-    min_mu: int = 10
-    max_mu: int = 10_000
 
 
 def aimd_rates(
@@ -172,7 +152,7 @@ def merge_consent(
     whichever of operator consent / robots / controller is slowest. Hosts
     without controller state keep their static rate; the scheduler's
     opt-in semantics (verified/spidering) pass through untouched. Feed the
-    result to ``politeness.consent_gate`` / ``CrawlEngine.init`` exactly
+    result to ``politeness.consent_gate`` / ``CrawlEngine.init_state`` exactly
     where the static consent table goes today.
     """
     d = to_delay_ms(rates).withColumnRenamed("effective_rate_ms", "__aimd_ms")

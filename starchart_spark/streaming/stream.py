@@ -473,97 +473,3 @@ def streaming_exact_dedup(
         .dropDuplicatesWithinWatermark(["text_key"])
         .drop("text_key")
     )
-
-
-def aimd_fold_factory(
-    state_dir: str,
-    r0_mu: int = 1_000,
-    add_mu: int = 50,
-    min_mu: int = 10,
-    max_mu: int = 10_000,
-):
-    """The foreachBatch fold for :func:`streaming_aimd_controller`,
-    factored out so the re-delivery guard is unit-testable: folding the
-    same batch_id twice is a no-op (the AIMD fold is not idempotent and
-    foreachBatch is at-least-once)."""
-    import os
-    import shutil
-
-    from starchart_spark.operators import aimd
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        os.makedirs(state_dir, exist_ok=True)
-        cur = os.path.join(state_dir, "current")
-        stamp = os.path.join(state_dir, "_last_batch")
-        last = -1
-        if os.path.exists(stamp):
-            with open(stamp) as fh:
-                last = int(fh.read().strip() or "-1")
-        if batch_id <= last:  # re-delivered batch: the fold already landed
-            return
-        prior = spark.read.parquet(cur) if os.path.isdir(cur) else None
-        rates = aimd.aimd_rates(
-            batch_df,
-            r0_mu=r0_mu,
-            add_mu=add_mu,
-            min_mu=min_mu,
-            max_mu=max_mu,
-            prior=prior,
-        ).select("hostname", "rate_mu")
-        if prior is not None:
-            carried = prior.join(
-                rates.select("hostname"), "hostname", "left_anti"
-            )
-            rates = rates.unionByName(carried)
-        nxt = os.path.join(state_dir, f"state-{batch_id}")
-        rates.coalesce(1).write.mode("overwrite").parquet(nxt)
-        old_dir = os.path.join(state_dir, f"_old-{batch_id}")
-        if os.path.isdir(cur):
-            os.rename(cur, old_dir)
-        os.rename(nxt, cur)
-        if os.path.isdir(old_dir):
-            shutil.rmtree(old_dir)
-        with open(stamp, "w") as fh:
-            fh.write(str(batch_id))
-
-    return _fold
-
-
-def streaming_aimd_controller(
-    attempts_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    r0_mu: int = 1_000,
-    add_mu: int = 50,
-    min_mu: int = 10,
-    max_mu: int = 10_000,
-):
-    """Continuous AIMD rate control over an unbounded fetch-attempt stream
-    — the batch epoch-chaining property (tests/test_aimd.py: split-fold ≡
-    one-fold) IS the streaming recurrence, so each micro-batch folds via
-    ``aimd.aimd_rates(prior=<carried dim>)`` in ``foreachBatch`` and the
-    controller dim persists to ``state_dir`` with an atomic swap.
-
-    Exactness contract: per-host attempt order must be monotone ACROSS
-    micro-batches (the natural arrival order — a host's epoch-2 attempts
-    arrive after its epoch-1 attempts); order WITHIN a batch is free
-    (the fold sorts). Replay safety: foreachBatch is at-least-once, and
-    the AIMD fold is NOT idempotent, so a ``_last_batch`` stamp skips
-    re-delivered batch ids — same guard shape as the engine's
-    atomic-batch rollback. State is one (hostname, rate_mu) row per
-    ever-seen host — the broadcast-size dim however long the stream runs;
-    hosts absent from a batch carry their state forward untouched.
-
-    Returns the StreamingQuery. Read ``{state_dir}/current`` at any time
-    for the live controller dim (feed ``aimd.to_delay_ms`` /
-    ``merge_consent``)."""
-    fold = aimd_fold_factory(
-        state_dir, r0_mu=r0_mu, add_mu=add_mu, min_mu=min_mu, max_mu=max_mu
-    )
-    return (
-        attempts_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -113,6 +113,54 @@ def test_engine_transport_mode_equals_join_mode(spark, tmp_path):
 
     assert snap(eng_a) == snap(eng_b)
 
+    # a transport fault on one topics URL of batch 2 fails the run loudly,
+    # commits nothing of that batch and leaves no cached frame behind; the
+    # next run() resumes from batch 1 to the join-mode end state
+    fault_url = min(
+        r["doc_id"]
+        for r in eng_a.visit_log.read(spark)
+        .filter("batch_id = 2 AND idx_in_page > 0")
+        .collect()
+    )
+    eng_c = CrawlEngine(
+        spark,
+        str(tmp_path / "wh_fault"),
+        CrawlSettings(
+            **settings,
+            transport=_fail_once_transport(
+                doc_map, fault_url, str(tmp_path / "fault.mark")
+            ),
+        ),
+    )
+    eng_c.init_state(dfs["seed_forges"], dfs["consent"])
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache_manager.numCachedEntries()
+    with pytest.raises(Exception, match="injected fault"):
+        eng_c.run()
+    assert cache_manager.numCachedEntries() == cached_before
+    snap_batches = {
+        sn.summary.get("batch_id") for tbl in eng_c._tables for sn in tbl.snapshots()
+    }
+    assert snap_batches == {0, 1}
+    eng_c.run()
+    assert snap(eng_c) == snap(eng_a)
+
+
+def _fail_once_transport(doc_map, fault_url, marker):
+    """Corpus-backed transport that raises on the first request for
+    ``fault_url``; the marker file makes "first" hold across the worker
+    processes."""
+
+    def _t(url):
+        import os
+
+        if url == fault_url and not os.path.exists(marker):
+            open(marker, "w").close()
+            raise ConnectionResetError(f"injected fault: {url}")
+        return doc_map.get(url)
+
+    return _t
+
 
 def _counting_corpus_transport(doc_map, log_path):
     """Corpus-backed transport that also appends every fetched URL to a

@@ -10,11 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from starchart_spark.crawl.corpus import CorpusSpec, make_corpus
-from starchart_spark.crawl.engine import CrawlEngine, CrawlSettings
+from starchart_spark.crawl.engine import HLL_B, CrawlEngine, CrawlSettings
 from starchart_spark.operators import sketch
 from starchart_spark.testing import corpus_to_spark
-
-HLL_B = 10
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +27,6 @@ def telemetry_crawl(spark, tmp_path_factory):
             items_per_api_call=10,
             host_buckets=8,
             track_host_distincts=True,
-            hll_b=HLL_B,
         ),
     )
     eng.init_state(dfs["seed_forges"], dfs["consent"])

@@ -395,74 +395,3 @@ def test_streaming_cms_matches_batch(spark, tmp_path):
         map(tuple, sketch.cms_build(df, "key", d=3, w=128, portable=True).collect())
     )
     assert got == want
-
-
-def test_streaming_aimd_matches_batch(spark, tmp_path):
-    """Streaming AIMD controller (foreachBatch + carried prior dim) ==
-    one-shot batch fold over the same attempt log — the epoch-chaining
-    property run through a real stream, per-host order monotone across
-    micro-batches (the arrival-order contract)."""
-    import os
-    import time as _time
-
-    import pyspark.sql.functions as F
-    from starchart_spark.operators import aimd
-
-    rows = [
-        ("a", t, t % 3 != 0) for t in range(1, 13)
-    ] + [("b", t, True) for t in range(1, 7)] + [
-        ("c", t, False) for t in range(1, 9)
-    ]
-    df = spark.createDataFrame(rows, "hostname string, ts long, ok boolean")
-    drop = str(tmp_path / "attempts")
-    # three epoch files written in ts order (FileStreamSource processes in
-    # discovery order; distinct mtimes pin it)
-    for lo, hi in ((1, 5), (5, 9), (9, 13)):
-        df.filter((F.col("ts") >= lo) & (F.col("ts") < hi)).coalesce(
-            1
-        ).write.mode("append").parquet(drop)
-        _time.sleep(1.1)
-
-    src = (
-        spark.readStream.schema("hostname string, ts long, ok boolean")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
-    state = str(tmp_path / "state")
-    q = stream.streaming_aimd_controller(
-        src, state, str(tmp_path / "ck"), r0_mu=1_000, add_mu=50
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["hostname"]: r["rate_mu"]
-        for r in spark.read.parquet(os.path.join(state, "current")).collect()
-    }
-    want = {
-        r["hostname"]: r["rate_mu"]
-        for r in aimd.aimd_rates(df, r0_mu=1_000, add_mu=50).collect()
-    }
-    assert got == want
-
-
-def test_streaming_aimd_replay_guard(spark, tmp_path):
-    """Re-delivering a folded batch_id is a no-op: the AIMD fold is not
-    idempotent, foreachBatch is at-least-once, so the stamp must gate."""
-    import os
-
-    from starchart_spark.streaming.stream import aimd_fold_factory
-
-    state = str(tmp_path / "state")
-    fold = aimd_fold_factory(state, r0_mu=1_000, add_mu=50)
-    batch = spark.createDataFrame(
-        [("a", 1, True), ("a", 2, True)], "hostname string, ts long, ok boolean"
-    )
-    fold(batch, 0)
-    first = spark.read.parquet(os.path.join(state, "current")).collect()
-    assert {r["hostname"]: r["rate_mu"] for r in first} == {"a": 1_100}
-    fold(batch, 0)  # replay: must NOT fold to 1_200
-    again = spark.read.parquet(os.path.join(state, "current")).collect()
-    assert {r["hostname"]: r["rate_mu"] for r in again} == {"a": 1_100}
-    fold(batch, 1)  # a genuinely new batch folds on top
-    nxt = spark.read.parquet(os.path.join(state, "current")).collect()
-    assert {r["hostname"]: r["rate_mu"] for r in nxt} == {"a": 1_200}
