@@ -1,4 +1,4 @@
-.PHONY: test durations test-fast package bench clean
+.PHONY: test durations test-fast perfbench-smoke package bench clean
 
 # the tier-1 command (ROADMAP.md)
 TIER1 = export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
@@ -12,6 +12,10 @@ durations:
 
 test-fast:
 	python -m pytest tests/ -x -q -k "not e2e and not resume and not streaming"
+
+# the benchmark's smoke test (tier-1's `pytest tests/` does not collect it)
+perfbench-smoke:
+	python3 -m pytest perfbench/test_run.py -q
 
 package:
 	mkdir -p dist

@@ -27,12 +27,19 @@ Batch dataflow (SURVEY.md §3.1):
       → url_seen append ; visit-log append ; lineage counters append [A3]
       → pending overwrite ; state snapshot commit (the checkpoint)
 
-All of the above is ONE Spark action per batch (snapstore.multi_commit):
-the sink rows union into a single partitioned write whose per-table counts
-and next-batch active-host count are observed metrics, and the snapshot
-commits are driver-side file moves in order, state last — the Spark
-equivalent of the reference's one-transaction-per-page commit
-(src/spider.rs:88-123). Asserted by tests/test_single_action_batch.py.
+All of the above commits through ONE write action per batch
+(snapstore.multi_commit): the sink rows union into a single partitioned
+write whose per-table counts and next-batch active-host count are observed
+metrics, and the snapshot commits are driver-side file moves in order,
+state last — the Spark equivalent of the reference's one-transaction-per-
+page commit (src/spider.rs:88-123). The write is not the batch's only SQL
+execution: two eager ``localCheckpoint``s cut the plan's lineage before it
+(the parsed repo rows, then the parsed topics), so a default-mode batch
+runs three. On the e2e corpus (3 forges x 100 repos, 20 per page) at
+local[4] with 8 shuffle partitions, a warm batch runs 7 + 3 + 19 = 29
+jobs; transport mode adds one checkpoint per fetch wave.
+tests/test_single_action_batch.py asserts one write and no
+count/collect/toPandas per batch.
 
 TTL re-crawl (P3): hosts stamp ``last_crawl_on`` from the injected batch
 clock when they drain; ``reactivate_due(now_s)`` re-enters them at page 1
@@ -62,7 +69,12 @@ from starchart_spark.operators import bloom as bloom_mod
 from starchart_spark.operators import dedup, multimodal, normalize, politeness, skew
 from starchart_spark.operators import robots as robots_mod
 from starchart_spark.operators import sketch as sketch_mod
-from starchart_spark.snapstore import SnapshotTable, _key_join, multi_commit
+from starchart_spark.snapstore import (
+    SnapshotTable,
+    _key_join,
+    empty_relation,
+    multi_commit,
+)
 
 # RFC 9309 product token the engine selects robots.txt groups for — the
 # package-name component of the reference UA (crawl/fetcher.py builds
@@ -164,7 +176,7 @@ class CrawlSettings:
     # below this many seen keys the exact anti-join alone is cheaper than a
     # probe pass — the bloom layer only engages past the threshold. The
     # check is DRIVER-side (a startup count + per-batch observed inserts),
-    # so steady-state batches stay one Spark action; at engagement the
+    # so steady-state batches keep their one write; at engagement the
     # filters are (re)built once from url_seen. 0 = always engaged.
     # Measured at sandbox test scale: probe+update cost ~2.8 s/batch of
     # pure plan/stage overhead while the exact anti-join is already
@@ -694,12 +706,13 @@ class CrawlEngine:
     # -- one micro-batch -----------------------------------------------------------
 
     def _run_batch(self, batch_id: int, active: DataFrame, docs: DataFrame) -> int:
-        """One micro-batch, committed by ONE Spark action (multi_commit).
+        """One micro-batch, committed by ONE write action (multi_commit).
 
         Returns the observed active-host count of the NEW state — the
         driver loop's continue/stop signal, collected as a metric on the
         commit write instead of a separate count() job. At default settings
-        a batch triggers exactly one Spark action (asserted by
+        a batch runs the two eager lineage checkpoints (module docstring)
+        and exactly one write, with no count/collect (asserted by
         tests/test_single_action_batch.py); the only extra jobs are the
         rare overfull-bucket bloom rebuild and the one-time filter rebuild
         when the seen set first crosses the engage threshold (the
@@ -840,7 +853,7 @@ class CrawlEngine:
             from starchart_spark.crawl import fetcher
 
             cache = (
-                self.spark.createDataFrame([], BODY_CACHE)
+                empty_relation(self.spark, BODY_CACHE)
                 if slim
                 else self.body_cache.read(self.spark)
             )
@@ -995,13 +1008,13 @@ class CrawlEngine:
         # keys, lineage counters); caching the first materialization keeps
         # the per-batch stage count flat instead of re-running the
         # parse→normalize→dedup pipeline once per branch. All persists are
-        # lazy — the batch still triggers exactly ONE action.
+        # lazy — they add no action; the write below materializes them.
         user_cands = normalize.normalize_users(sched_repo_rows)
         repo_cands = persist(normalize.normalize_repositories(sched_repo_rows, topics))
 
         # 6. seen filter (bloom prefilter when engaged + exact anti-join)
         # and MERGE sinks.
-        # Steps 6-9 are DECLARED here and materialized by ONE Spark action
+        # Steps 6-9 are DECLARED here and materialized by ONE write action
         # (snapstore.multi_commit) at the end of the batch — the reference
         # commits a page's users/repos/seen rows in one sqlite transaction
         # (src/spider.rs:88-123); round 2's ~6 jobs with a count() sync

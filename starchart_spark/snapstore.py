@@ -56,6 +56,17 @@ def _observed_write(df: DataFrame, path: str) -> int:
     return int(obs.get["n"])
 
 
+def empty_relation(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """The empty relation every empty snapshot read returns: the declared
+    schema, nullability included, in a plan Catalyst can see is empty.
+    ``limit(0)`` becomes an empty ``LocalRelation`` at optimization, so
+    ``PropagateEmptyRelation`` deletes the joins, aggregates and union
+    branches that read it at plan time. A bare ``createDataFrame([])`` is a
+    statistics-free Python RDD scan that still plans shuffles and runs
+    Python-worker tasks over no rows."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 def _key_join(left: DataFrame, right: DataFrame, keys: list[str], how: str) -> DataFrame:
     """Semi/anti join on the natural key, NULL-safe (``<=>``): nullable key
     columns (e.g. url_seen.key2 for user keys) must compare equal when both
@@ -221,13 +232,11 @@ class SnapshotTable:
             snap = self.current_snapshot()
         else:
             snap = next(s for s in self.snapshots() if s.snapshot_id == snapshot_id)
-        if snap is None or not snap.data_files:
-            return spark.createDataFrame([], self.schema)
-        return self._read_files(spark, snap.data_files)
+        return self._read_files(spark, snap.data_files if snap else [])
 
     def _read_files(self, spark: SparkSession, rels: list[str]) -> DataFrame:
         if not rels:
-            return spark.createDataFrame([], self.schema)
+            return empty_relation(spark, self.schema)
         paths = [os.path.join(self._data_dir, f) for f in rels]
         return spark.read.schema(self.schema).parquet(*paths)
 
@@ -274,7 +283,7 @@ class SnapshotTable:
                 cur_files,
                 {"op": "merge-noop", "ts_ms": _now_ms(), **(summary or {})},
             )
-            return snap, spark.createDataFrame([], self.schema)
+            return snap, empty_relation(spark, self.schema)
         snap = self._commit(
             cur_files + [rel],
             {"op": "merge-insert", "inserted": n, "ts_ms": _now_ms(), **(summary or {})},
@@ -382,7 +391,7 @@ class SnapshotTable:
                 cur.data_files if cur else [],
                 {"op": "merge-delete-noop", "ts_ms": _now_ms(), **(summary or {})},
             )
-            return snap, spark.createDataFrame([], self.schema)
+            return snap, empty_relation(spark, self.schema)
         remaining = _key_join(existing, keys, self.key_cols, "left_anti")
         if rewrite is not None:
             rels = self._write_bucket_files(remaining)
@@ -463,7 +472,7 @@ class SnapshotTable:
             else self.current_snapshot()
         )
         if to is None or to.snapshot_id == frm.snapshot_id:
-            return spark.createDataFrame([], self.schema)
+            return empty_relation(spark, self.schema)
         if set(frm.data_files) <= set(to.data_files):
             added = [f for f in to.data_files if f not in set(frm.data_files)]
             return self._read_files(spark, added)
@@ -656,7 +665,13 @@ def multi_commit(
             pieces[i].union(pieces[i + 1]) if i + 1 < len(pieces) else pieces[i]
             for i in range(0, len(pieces), 2)
         ]
-    union = pieces[0]
+    # narrow coalesce to the session's shuffle width: the union has one
+    # partition per partition of every part, and each would be a write task
+    # of its own (42 tasks for a ~300-row crawl batch on local[4]). Merging
+    # partitions never splits a (__tbl, __pb) group across more tasks than
+    # before, so the written file count cannot rise; no-op when the union is
+    # already narrower.
+    union = pieces[0].coalesce(int(spark.conf.get("spark.sql.shuffle.partitions")))
 
     from pyspark.sql import Observation
 

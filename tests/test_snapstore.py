@@ -27,6 +27,24 @@ def test_empty_read(spark, table):
     assert df.schema == SCHEMA
 
 
+def test_empty_read_prunes_at_plan_time(spark, table):
+    """An empty table reads as a relation the optimizer can see is empty:
+    an anti-join against it is its left side, planned with no shuffle and
+    no Python RDD scan, and the read keeps the declared schema."""
+    from pyspark.sql import functions as F
+
+    empty = table.read(spark)
+    assert empty.schema == SCHEMA
+    left = spark.range(50).select(
+        F.concat(F.lit("k"), F.col("id")).alias("k"), F.col("id").alias("x")
+    )
+    joined = left.join(empty, "k", "left_anti")
+    assert sorted(joined.collect()) == sorted(left.collect())
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
 def test_merge_insert_first_writer_wins(spark, table):
     snap1, ins1 = table.merge_insert(spark, spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA))
     assert ins1.count() == 2
@@ -256,6 +274,55 @@ def test_multi_commit_bucket_pure_files(spark, tmp_path):
     tbl.merge_update(spark, one)
     untouched = {f for f in snap.data_files if tbl._file_bucket(f) != 2}
     assert untouched <= set(tbl.current_snapshot().data_files)
+
+
+def test_multi_commit_writes_at_shuffle_width(spark, tmp_path):
+    """A wide union with more partitions than spark.sql.shuffle.partitions
+    commits the same rows and observed counts, with at most that many
+    part files in each committed data dir (one per __tbl/__pb group)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from starchart_spark.snapstore import multi_commit
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts, expect = [], {}
+    for i in range(3):
+        bucketed = i == 0
+        tbl = SnapshotTable(
+            str(tmp_path / f"w{i}"),
+            BUCKETED if bucketed else SCHEMA,
+            ["k"],
+            bucket_by=("host_bucket", 4) if bucketed else None,
+        )
+        rows = spark.range(i * 1000, i * 1000 + 60).select(
+            F.concat(F.lit("key"), F.col("id")).alias("k"),
+            F.col("id").alias("v"),
+            (F.col("id") % 4).cast("int").alias("host_bucket"),
+        )
+        # more partitions per part than the session's shuffle width
+        rows = rows.repartition(width + 4)
+        if not bucketed:
+            rows = rows.drop("host_bucket")
+        parts.append((tbl, rows, "merge-append"))
+        expect[f"w{i}"] = sorted((r["k"], r["v"]) for r in rows.collect())
+    assert sum(r.rdd.getNumPartitions() for _t, r, _op in parts) > width
+
+    got = multi_commit(spark, str(tmp_path / "_stw"), parts)
+    for tbl, _rows, _op in parts:
+        name = os.path.basename(tbl.path)
+        assert got[f"n_{name}"] == 60
+        assert sorted((r["k"], r["v"]) for r in tbl.read(spark).collect()) == expect[name]
+        snap = tbl.current_snapshot()
+        assert snap.summary["inserted"] == 60
+        for rel in snap.data_files:
+            files = [
+                f
+                for f in os.listdir(os.path.join(tbl._data_dir, rel))
+                if f.startswith("part-") and f.endswith(".parquet")
+            ]
+            assert 0 < len(files) <= width, (rel, files)
 
 
 def test_merge_delete_returns_durable_rows(spark, tmp_path):
