@@ -4,10 +4,12 @@
 Prints ONE JSON line:
     {"metric": "headline query medians, summed", "value": S, "unit": "s",
      "queries": {...per-query median seconds...}, "query_reps": {...},
-     "sf": ..., "cpus": N}
+     "query_compiles": {...}, "sf": ..., "cpus": N}
 
 Each query runs once untimed (codegen warm-up) and then
 ``STARCHART_BENCH_QUERY_REPS`` times (default 3) into a ``noop`` sink.
+``query_compiles`` counts the classes compiled during a query's timed
+reps; nonzero flags a query whose generated code changes from run to run.
 A query that raises ends the run with a non-zero exit; nothing is retried.
 The frontier and the crawl engine are measured by ``perfbench/run.py``.
 
@@ -25,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from starchart_spark.queries import QUERIES  # noqa: E402
-from starchart_spark.session import get_spark  # noqa: E402
+from starchart_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 HEADLINE_QUERIES = [
     "three_way_join",
@@ -169,28 +171,34 @@ HEADLINE_QUERIES = [
 ]
 
 
-def sweep(spark, sf_dir: str, reps: int) -> tuple[dict, dict]:
-    """(median seconds, raw rep seconds) per headline query.
+def sweep(spark, sf_dir: str, reps: int) -> tuple[dict, dict, dict]:
+    """(median seconds, raw rep seconds, compiles over the reps) per
+    headline query.
 
     The untimed run right before each query's reps warms its generated
-    code: a long-lived cluster compiles a query once and amortizes it, and
-    the JVM codegen cache holds ~100 entries, so warming every query up
-    front would evict the early ones. Medians of ``reps`` runs, because a
-    single ambient burst once moved a one-shot timing by ~2x.
+    code: a long-lived cluster compiles a query once and amortizes it. The
+    session's codegen cache (``session.CODEGEN_CACHE_ENTRIES`` classes) is
+    sized so a query's classes last from its warm-up through its reps; a
+    query that still compiles during its reps shows in the compile count.
+    Medians of ``reps`` runs, because a single ambient burst once moved a
+    one-shot timing by ~2x.
     """
     medians: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     for name in HEADLINE_QUERIES:
         fn, _ = QUERIES[name]
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         times = []
+        c0 = codegen_compiles(spark)
         for _ in range(reps):
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
+        compiles[name] = codegen_compiles(spark) - c0
         medians[name] = round(statistics.median(times), 3)
         raw[name] = times
-    return medians, raw
+    return medians, raw, compiles
 
 
 def main() -> None:
@@ -203,7 +211,7 @@ def main() -> None:
         shuffle_partitions=cpus * 2,
     )
     try:
-        medians, raw = sweep(spark, sf_dir, reps)
+        medians, raw, compiles = sweep(spark, sf_dir, reps)
     finally:
         spark.stop()
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -213,6 +221,7 @@ def main() -> None:
         "unit": "s",
         "queries": medians,
         "query_reps": raw,
+        "query_compiles": compiles,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": cpus,
     }))

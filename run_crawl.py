@@ -13,7 +13,9 @@ Local sandbox usage (synthesizes the deterministic FIXTURES.md corpus):
     python run_crawl.py --warehouse /tmp/wh --synth-forges 3 --cpus 32
 
 Prints one JSON line of run metrics (batches, entity counts, lineage
-totals) and exits 0 on a clean drain of the frontier.
+totals, and ``codegen_compiles``: the classes compiled from generated code
+during the crawl, read from Spark's counter) and exits 0 on a clean drain
+of the frontier.
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     from starchart_spark.crawl.engine import CrawlEngine, CrawlSettings
-    from starchart_spark.session import get_spark
+    from starchart_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(
         app_name="starchart-crawl",
@@ -80,9 +82,11 @@ def main(argv: list[str] | None = None) -> int:
         seeds = spark.read.parquet(args.seeds)
         consent = spark.read.parquet(args.consent)
 
+    compiles0 = codegen_compiles(spark)
     if not args.resume:
         engine.init_state(seeds, consent)
     stats = engine.run(docs)
+    compiles = codegen_compiles(spark) - compiles0
 
     lineage = engine.lineage.read(spark)
     totals = lineage.agg(
@@ -98,6 +102,7 @@ def main(argv: list[str] | None = None) -> int:
         "repositories": engine.repositories.read(spark).count(),
         "url_seen": engine.url_seen.read(spark).count(),
         "lineage_totals": {k: int(totals[k] or 0) for k in totals.asDict()},
+        "codegen_compiles": compiles,
     }
     if args.discover_media:
         out["media_assets"] = engine.media_assets.read(spark).count()

@@ -18,6 +18,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _default_driver_mem() -> str:
@@ -81,6 +82,13 @@ def get_spark(
         # runtime bloom-filter join: complements our explicit partitioned
         # bloom seen-filter for large anti-joins
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # Generated-code cache sized to the engine's working set: one
+        # frontier pass is ~140 classes and init_state plus one cold crawl
+        # ~295. A cache smaller than that (Spark's default is 100) evicts
+        # what the next pass or batch needs, which then compiles its Java
+        # again. A static SQL conf: it takes effect only when get_spark
+        # creates the session, not on one that already exists.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         # per-call Python call-site capture (error enrichment) walks the
         # stack + importlib on EVERY DataFrame method — ~0.5 s of a
@@ -125,3 +133,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the driver JVM has compiled from generated code so far.
+
+    Reads Spark's own ``CodegenMetrics`` counter (one sample per cache
+    miss); it runs no Spark job. Take the difference of two reads to count
+    the compiles of the work in between."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
