@@ -222,9 +222,9 @@ class CrawlEngine:
         # entity confirm anti-join (two table scans + union + NULL-safe
         # anti-join, ~4-6 AQE jobs at cadence). None = unknown (direct
         # _run_batch callers) → conservative join; run() verifies the
-        # invariant with ONE startup isEmpty() job; foreign-entity writers
-        # (tar import, streaming ingest) set it False for the rest of the
-        # process — see _entity_confirm_skippable.
+        # invariant with ONE startup isEmpty() job; a foreign-entity writer
+        # (the tar import) sets it False for the rest of the process — see
+        # _entity_confirm_skippable.
         self._entities_pure: bool | None = None
         # driver-maintained seen-set size for the bloom engage threshold;
         # None = unknown → treat as engaged (direct _run_batch callers);
@@ -369,10 +369,10 @@ class CrawlEngine:
 
         The confirm anti-join (vs the users/repositories tables themselves)
         exists for entities that are NOT covered by url_seen: foreign rows
-        from a tar import (interchange.import_into_engine) or the streaming
-        ingest sink, which merge entities without seen keys. Engine batches
-        always commit an entity's seen key in the same multi_commit (and the
-        rollback guard repairs any torn commit before this runs), so when
+        from a tar import (interchange.import_into_engine), which merges
+        entities without seen keys. Engine batches always commit an
+        entity's seen key in the same multi_commit (and the rollback guard
+        repairs any torn commit before this runs), so when
         ``entities left-anti url_seen`` is empty the anti-join is provably a
         no-op for every batch of this run and each batch drops two entity
         table scans, a union and a NULL-safe anti-join (~4-6 AQE jobs — the

@@ -7,11 +7,11 @@ entry per type holding its search-page URL template, its topics URL
 template (None when topics come inline with the search page) and its
 search-page parser. Everything that builds a forge URL or picks a parser
 reads it: the engine's page and topic fetch columns (``url_col``, JVM string
-concats), the streaming frontier's topic visits and
-``parse_search_pages_typed``. GitHub/Sourcehut shapes follow the public APIs
-of those forges, slotted behind the same table. forge_type is a *column*:
-per-type parsers are plain DataFrame plans unioned together — no per-row
-dispatch, and Catalyst prunes the JSON parse to the consumed fields.
+concats) and ``parse_search_pages_typed``. GitHub/Sourcehut shapes follow
+the public APIs of those forges, slotted behind the same table. forge_type
+is a *column*: per-type parsers are plain DataFrame plans unioned together
+— no per-row dispatch, and Catalyst prunes the JSON parse to the consumed
+fields.
 
 Parsing itself is ``from_json`` against the declared wire schema
 (forge/gitea/src/schema.rs:22-151) — JVM-side, no Python in the loop.
@@ -43,13 +43,6 @@ def first_text_span(df: DataFrame, out_col: str = "wire_json") -> DataFrame:
     spans_sorted = F.expr("array_sort(spans, (a, b) -> a.offset - b.offset)")
     api = F.filter(spans_sorted, lambda s: s["kind"] == F.lit("api_json"))
     return df.withColumn(out_col, F.element_at(api, 1)["text"])
-
-
-def split_documents(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(search_pages, topics_pages) from the documents table, by URL shape."""
-    is_search = F.col("doc_id").contains(SEARCH_PATH)
-    is_topics = F.col("doc_id").endswith("/topics")
-    return docs.filter(is_search), docs.filter(is_topics & ~is_search)
 
 
 def parse_gitea_search_pages(search_docs: DataFrame) -> DataFrame:

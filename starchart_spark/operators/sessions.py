@@ -14,10 +14,12 @@ reproduces both rules as ``lag diff > INTERVAL`` + ``max(ts) + INTERVAL``.
 At 100 TB this is ONE hash-partition exchange on ``user_id`` with partial
 aggregation map-side; contrast the lag+cumsum formulation, which needs a
 full sort-window pass AND a second aggregation. The same expression works
-unchanged in Structured Streaming (add ``withWatermark`` before the
-groupBy) — session_window is one of the few aggregations Spark can run
-incrementally with state cleanup, which is exactly why the operator is
-expressed this way rather than via window functions.
+unchanged in Structured Streaming: pass a watermarked stream
+(``sessionize(stream.withWatermark("ts", "1 hour"))``) to an append-mode
+sink, and a session emits once its window end passes the watermark.
+session_window is one of the few aggregations Spark can run incrementally
+with state cleanup, which is exactly why the operator is expressed this
+way rather than via window functions.
 """
 
 from __future__ import annotations
@@ -64,23 +66,3 @@ def sessionize(
         )
     )
 
-
-def sessionize_stream(
-    stream_df: DataFrame,
-    gap: str = "8 hours",
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming form of :func:`sessionize`: identical aggregation with a
-    watermark so closed sessions emit and their state is dropped. Returned
-    DataFrame is unstarted — attach your own ``writeStream`` (append mode;
-    a session emits once its window end passes the watermark)."""
-    return sessionize(
-        stream_df.withWatermark(ts_col, watermark),
-        gap,
-        user_col,
-        ts_col,
-        value_col,
-    )

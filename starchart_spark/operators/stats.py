@@ -46,7 +46,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from starchart_spark.operators.skew import (
@@ -66,6 +66,18 @@ def _check_q(q_millis: Sequence[int]) -> list[int]:
     if len(set(qs)) != len(qs):
         raise ValueError("q_millis must be distinct")
     return qs
+
+
+def _mass(weight_col: str) -> Column:
+    """``weight_col`` as the BIGINT ``__w``, failing the query on a negative
+    weight: a negative mass makes the running prefix non-monotone, so one
+    target can straddle several rows (or none)."""
+    w = F.col(weight_col).cast("long")
+    return (
+        F.when(w < 0, F.raise_error(F.lit(f"negative weight in {weight_col}")))
+        .otherwise(w)
+        .alias("__w")
+    )
 
 
 def exact_quantiles(
@@ -148,7 +160,8 @@ def weighted_quantiles(
     This is the cut point a token-budget policy actually needs: "half the
     corpus TOKENS live in docs shorter than X" is a weighted p50, not a
     row p50 — long docs carry more mass. Weights must be non-negative
-    BIGINTs (token counts, byte sizes); zero-weight rows are transparent
+    BIGINTs (token counts, byte sizes), and a negative one fails the
+    query; zero-weight rows are transparent
     (they can never straddle a target: their exclusive and inclusive
     prefixes are equal).
 
@@ -162,7 +175,7 @@ def weighted_quantiles(
     qs = _check_q(q_millis)
     vals = df.select(
         F.col(value_col).cast("long").alias("value"),
-        F.col(weight_col).cast("long").alias("__w"),
+        _mass(weight_col),
     ).filter(F.col("value").isNotNull() & F.col("__w").isNotNull())
     ranked = ordered_prefix(
         vals,
@@ -363,14 +376,15 @@ def group_weighted_quantiles(
     map-side-combined aggregate, and the #groups·#qs target dim joined on
     grp plus the straddle predicate (``excl < T ≤ excl + w`` — exactly
     one row per (group, target); the join is hash-equi on grp with the
-    range as a residual filter). Zero-weight rows are transparent; NULL
-    values/weights excluded as in the rest of the module.
+    range as a residual filter). Zero-weight rows are transparent, a
+    negative weight fails the query; NULL values/weights excluded as in
+    the rest of the module.
     """
     qs = _check_q(q_millis)
     vals = df.select(
         F.col(group_col).alias("grp"),
         F.col(value_col).cast("long").alias("value"),
-        F.col(weight_col).cast("long").alias("__w"),
+        _mass(weight_col),
     ).filter(F.col("value").isNotNull() & F.col("__w").isNotNull())
     ranked = grouped_ordered_prefix(
         vals,

@@ -86,10 +86,9 @@ def test_sliding_limiter(spark):
 
 
 def test_budget_capacity_closed_form():
-    """The streaming cursor's per-round capacity (ceil(budget/rate)) must
-    equal the batch engine's split_by_budget on token-bucket slots
-    (count of i with i*rate < budget) for any positive rate/budget —
-    the invariant the stream/batch deferral parity rests on."""
+    """A host's per-batch fetch capacity in closed form (ceil(budget/rate))
+    must equal the batch engine's split_by_budget on token-bucket slots
+    (count of i with i*rate < budget) for any positive rate/budget."""
     import math
 
     for rate in (1, 2, 3, 7, 100, 999, 1000, 2000):

@@ -57,7 +57,7 @@ def test_known_sessions_and_gap_boundary(spark):
 
 
 def test_streaming_form_matches_batch(spark, tmp_path):
-    # the same aggregation through sessionize_stream over a file stream:
+    # the same aggregation over a watermarked file stream:
     # every session whose window closed before the final watermark must
     # emit, and emitted rows must byte-match the batch result
     rows = [_ev(i, i * 30, 100 + (i % 3), float(i)) for i in range(40)]
@@ -70,7 +70,7 @@ def test_streaming_form_matches_batch(spark, tmp_path):
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     q = (
-        sessions.sessionize_stream(stream, gap="8 hours", watermark="1 hour")
+        sessions.sessionize(stream.withWatermark("ts", "1 hour"), gap="8 hours")
         .writeStream.format("memory")
         .queryName("sess_out")
         .outputMode("append")

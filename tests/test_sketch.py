@@ -302,3 +302,70 @@ def test_theta_disjoint_and_grouped(spark):
     rb = regs.filter("g = 1").drop("g")
     row = sketch.theta_intersect(ra, rb).collect()[0]
     assert row["matches"] == 0 and row["est_inter"] == 0.0
+
+
+def test_streaming_hll_registers_match_batch(spark, tmp_path):
+    """Streaming HLL registers (complete-mode max aggregate) == batch
+    registers on the same rows, across several micro-batches — the
+    bounded-state streaming cardinality path."""
+    df = spark.range(2_000).select(
+        (F.col("id") % 3).cast("int").alias("g"), F.col("id").alias("key")
+    )
+    drop_dir = str(tmp_path / "keys")
+    df.repartition(4, "key").write.parquet(drop_dir)
+
+    src = (
+        spark.readStream.schema("g int, key long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(drop_dir)
+    )
+    q = (
+        sketch.hll_registers(src, "key", ["g"], b=8, portable=True)
+        .writeStream.format("memory")
+        .queryName("hll_regs")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    got = sorted(
+        map(tuple, spark.sql("SELECT g, bucket, rho FROM hll_regs").collect())
+    )
+    want = sorted(
+        map(
+            tuple,
+            sketch.hll_registers(df, "key", ["g"], b=8, portable=True).collect(),
+        )
+    )
+    assert got == want
+
+
+def test_streaming_cms_matches_batch(spark, tmp_path):
+    """Streaming CMS cells (complete-mode sum aggregate) == batch cells on
+    the same rows across micro-batches."""
+    df = spark.range(600).select((F.col("id") % 37).alias("key"))
+    drop_dir = str(tmp_path / "cms_keys")
+    df.repartition(4, "key").write.parquet(drop_dir)
+
+    src = (
+        spark.readStream.schema("key long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(drop_dir)
+    )
+    q = (
+        sketch.cms_build(src, "key", d=3, w=128, portable=True)
+        .writeStream.format("memory")
+        .queryName("cms_cells")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        map(tuple, spark.sql("SELECT row, cell, cnt FROM cms_cells").collect())
+    )
+    want = sorted(
+        map(tuple, sketch.cms_build(df, "key", d=3, w=128, portable=True).collect())
+    )
+    assert got == want

@@ -202,6 +202,18 @@ def test_weighted_quantiles_partition_invariance(spark):
     assert a == b
 
 
+def test_weighted_quantiles_reject_negative_weight(spark):
+    # a negative mass breaks the prefix's monotonicity: without the check,
+    # q=500 straddles two rows here, (500, 4, 1) and (500, 4, 3)
+    df = spark.createDataFrame(
+        [("g", 1, 5), ("g", 2, -3), ("g", 3, 5)], ["g", "v", "w"]
+    )
+    with pytest.raises(Exception, match="negative weight in w"):
+        stats.weighted_quantiles(df, "v", "w", [500]).collect()
+    with pytest.raises(Exception, match="negative weight in w"):
+        stats.group_weighted_quantiles(df, "g", "v", "w", [500]).collect()
+
+
 # ----------------------------------------------------- composed priority
 
 
